@@ -2,7 +2,7 @@ from nfl_feature_store_spark.operators.sessionize import sessionize
 from nfl_feature_store_spark.operators.windows import FeatureSpec, compile_window_features
 from nfl_feature_store_spark.operators.asof import asof_join, latest_snapshot
 from nfl_feature_store_spark.operators.rank import max_rank, rank_features
-from nfl_feature_store_spark.operators.ewma import with_ewma, with_ewma_jvm
+from nfl_feature_store_spark.operators.ewma import with_ewma
 from nfl_feature_store_spark.operators.elo import elo_per_entity, elo_pairwise
 from nfl_feature_store_spark.operators.rangejoin import interval_overlap_join
 from nfl_feature_store_spark.operators.quantiles import grouped_quantiles
@@ -26,7 +26,6 @@ __all__ = [
     "max_rank",
     "rank_features",
     "with_ewma",
-    "with_ewma_jvm",
     "elo_per_entity",
     "elo_pairwise",
     "interval_overlap_join",

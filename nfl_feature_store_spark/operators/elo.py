@@ -13,7 +13,7 @@ Two execution strategies:
 
 * :func:`elo_per_entity` — each entity rated against a fixed field (1500) or
   a supplied per-row opponent rating column. Updates are sequential PER
-  ENTITY only => embarrassingly parallel by entity via ``applyInPandas``
+  ENTITY only => embarrassingly parallel by entity via ``mapInArrow``
   (the transcript case: one rating stream per conv_id).
 * :func:`elo_pairwise` — two-sided matches (both ratings change per event):
   globally sequential, so the driver runs a synchronous loop over time
@@ -67,7 +67,6 @@ def elo_per_entity(
     presorted: bool = False,
     num_partitions: int | None = None,
     max_partition_rows: int | None = None,
-    transport: str = "arrow",
 ) -> DataFrame:
     """Per-entity cumulative rating before each event (parallel by entity).
 
@@ -78,56 +77,16 @@ def elo_per_entity(
     scan runs per slice on raw numpy arrays. ``max_partition_rows`` is the
     same fail-fast memory tripwire as with_ewma's.
 
-    ``transport`` (round-4, mirrors with_ewma): ``"arrow"`` (default) runs
-    via ``mapInArrow`` — passthrough columns (text payloads) stay Arrow
-    buffers; only (entity, order, outcome[, opponent]) cross into
-    pandas/numpy and the rating column is appended positionally.
-    ``"pandas"`` keeps the original full-row ``mapInPandas`` kernel.
-    Results are identical (NaN outcomes skip updates either way; the
-    appended column maps NaN→NULL like the pandas transport).
+    Only (entity, order, outcome[, opponent]) cross into numpy; passthrough
+    columns (text payloads) stay Arrow buffers and the rating column is
+    appended positionally. NaN outcomes skip the update.
     """
-    from collections.abc import Iterator
-
-    if transport not in ("arrow", "pandas"):
-        raise ValueError(f"transport must be 'arrow' or 'pandas', got {transport!r}")
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
     )
     order = list(order_cols)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # tripwire fires while draining, before concat doubles peak memory
-        chunks: list[pd.DataFrame] = []
-        total = 0
-        for b in batches:
-            total += len(b)
-            if max_partition_rows is not None and total > max_partition_rows:
-                raise ValueError(
-                    f"elo_per_entity partition holds > max_partition_rows="
-                    f"{max_partition_rows} rows; raise num_partitions or thin the projection"
-                )
-            chunks.append(b)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values([entity_col] + order, kind="mergesort", ignore_index=True)
-        outcomes = pdf[outcome_col].astype("float64").to_numpy()
-        opp = (
-            pdf[opponent_rating_col].astype("float64").to_numpy()
-            if opponent_rating_col
-            else np.full(len(pdf), init)
-        )
-        ent = pdf[entity_col].to_numpy()
-        # group boundary indices on the sorted entity column
-        starts = np.flatnonzero(np.r_[True, ent[1:] != ent[:-1]])
-        ends = np.r_[starts[1:], len(ent)]
-        pre = np.empty(len(ent), dtype="float64")
-        for s, e in zip(starts, ends):
-            pre[s:e] = _elo_scan(outcomes[s:e], opp[s:e], k, init)
-        pdf[out_col] = pre
-        yield pdf
-
-    def arrow_kernel(batches):
+    def kernel(batches):
         import pyarrow as pa
 
         blist = []
@@ -175,9 +134,7 @@ def elo_per_entity(
     else:
         n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         clustered = df.repartition(int(n), entity_col).sortWithinPartitions(entity_col, *order)
-    if transport == "pandas":
-        return clustered.mapInPandas(kernel, schema=out_schema)
-    return clustered.mapInArrow(arrow_kernel, schema=out_schema)
+    return clustered.mapInArrow(kernel, schema=out_schema)
 
 
 def elo_pairwise(

@@ -80,7 +80,9 @@ def compile_window_features(df: DataFrame, spec: FeatureSpec = FeatureSpec()) ->
 
     Returns the input plus ``last_/form_/roll{k}_/expanding_/session_avg_``
     columns per metric. EWM (W5) and Elo (W9) are sequential recurrences and
-    live in operators/ewma.py / operators/elo.py (applyInPandas kernels).
+    live in operators/ewma.py / operators/elo.py (mapInArrow kernels); the
+    production engine, operators/window_kernel.py, computes every family
+    and the EWMA in one Arrow stage and is tested against this compiler.
 
     Three eager DataFrame steps (each is one Catalyst analysis barrier —
     kept minimal because classic PySpark analyzes the whole accumulated tree

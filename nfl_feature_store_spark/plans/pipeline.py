@@ -17,23 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nfl_feature_store_spark.functions.turn_metrics import METRIC_COLS, dedup_latest, with_turn_metrics
-from nfl_feature_store_spark.operators.ewma import with_ewma, with_ewma_jvm
+from nfl_feature_store_spark.functions.turn_metrics import dedup_latest, with_turn_metrics
+from nfl_feature_store_spark.operators.ewma import with_ewma
 from nfl_feature_store_spark.operators.rank import rank_features
 from nfl_feature_store_spark.operators.sessionize import DEFAULT_GAP_S, sessionize
+from nfl_feature_store_spark.operators.window_kernel import window_features_ewma_kernel
 from nfl_feature_store_spark.operators.windows import FeatureSpec, compile_window_features
-
-
-#: metric count from which the vectorized Arrow window kernel is selected
-#: even when it must INTRODUCE the Python boundary (no EWMA stage to merge
-#: into). WindowExec pays a per-window-function-per-row interpreted-
-#: evaluator cost (~5 functions/metric), while the kernel's NumPy passes
-#: amortize across all metrics; measured at sf0.1 the kernel already wins
-#: at width 4 (0.98s vs 1.59s) and the gap grows ~linearly with width
-#: (width 190: 5.4s vs 74.6s incl. plan build) — see OPTIMIZATION_r06.md.
-#: When the pandas EWMA stage runs anyway, the boundary is already paid and
-#: the kernel is selected at EVERY width (width 3 flagship: 1.1s vs 1.8s).
-WINDOW_KERNEL_MIN_METRICS = 4
 
 
 def backfill_features(
@@ -44,8 +33,7 @@ def backfill_features(
     rank_metric: str | None = "roll10_chars",
     rank_bucket: str = "day",
     dedup: bool = True,
-    ewma_engine: str = "pandas",
-    window_engine: str = "auto",
+    window_engine: str = "kernel",
 ) -> DataFrame:
     """transcripts (conv_id, turn_idx, role, text, tool, ts) → feature table.
 
@@ -53,84 +41,27 @@ def backfill_features(
     text (per-turn text equality invariant) plus every strictly-past feature
     family per metric.
 
-    ``window_engine``: ``"expr"`` compiles the window families as Spark
-    window expressions (operators/windows.py) with the EWMA kernel appended;
-    ``"kernel"`` computes families AND EWMA in one vectorized mapInArrow
-    stage (operators/window_kernel.py, bitwise-identical, pytest-pinned);
-    ``"auto"`` (default) picks the kernel whenever the pandas EWMA stage
-    already pays the Python boundary, or from WINDOW_KERNEL_MIN_METRICS
-    metrics otherwise — the regimes where WindowExec's per-function
-    overhead dominates (measurements at the constant's definition).
+    ``window_engine``: ``"kernel"`` (default, the production engine)
+    computes every window family AND the EWMA in one vectorized
+    ``mapInArrow`` stage (operators/window_kernel.py) over the
+    sessionize output — the same single hash(entity) exchange. ``"expr"``
+    is the reference path the kernel is tested against bit for bit: Spark
+    window expressions (operators/windows.py) followed by ``with_ewma``.
     """
+    if window_engine not in ("kernel", "expr"):
+        raise ValueError(f"window_engine must be 'kernel' or 'expr', got {window_engine!r}")
     df = transcripts
     if dedup:
         df = dedup_latest(df)
     df = with_turn_metrics(df)
     df = sessionize(df, entity_col=spec.entity_col, gap_s=gap_s)
-    if ewma_engine not in ("pandas", "jvm"):
-        # a typo like 'JVM' must not silently select the other engine
-        # (round-3 advice); matches the mode/staleness validation style
-        raise ValueError(
-            f"ewma_engine must be 'pandas' or 'jvm', got {ewma_engine!r}"
-        )
-    if window_engine not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"window_engine must be 'auto', 'expr' or 'kernel', got {window_engine!r}"
-        )
-    use_kernel = window_engine == "kernel" or (
-        window_engine == "auto"
-        and ewma_engine == "pandas"
-        and (bool(ewma_span) or len(spec.metrics) >= WINDOW_KERNEL_MIN_METRICS)
-    )
-    if use_kernel:
-        # windows + EWMA in one Arrow pass over the already hash(entity)-
-        # clustered, entity-sorted sessionize output — the same single
-        # exchange, with ~5x fewer columns crossing the Python boundary
-        # than the expression path's EWMA hop (which ships every computed
-        # window column both ways)
-        from nfl_feature_store_spark.operators.window_kernel import (
-            window_features_ewma_kernel,
-        )
-
-        df = window_features_ewma_kernel(
-            df, spec, ewma_span=ewma_span or None, presorted=True
-        )
-        if rank_metric:
-            df = df.withColumn("__bucket", F.date_trunc(rank_bucket, F.col("ts")))
-            df = rank_features(df, [rank_metric], ["__bucket"]).drop("__bucket")
-        return df
-    df = compile_window_features(df, spec)
-    if ewma_span:
-        if ewma_engine == "jvm":
-            # segmented closed-form scan entirely in Tungsten rows — no
-            # Python workers, no Arrow round-trip, zero new exchanges
-            # (pytest-asserted). Measured +15-25% wall vs the pandas kernel
-            # at local[8]/2.5M (extra chunk-window sort + per-row marker
-            # lists vs pandas' cython ewm), so it is the OPTION for
-            # Python-less deployments, not the default
-            df = with_ewma_jvm(
-                df,
-                metrics=spec.metrics,
-                span=ewma_span,
-                entity_col=spec.entity_col,
-                order_cols=spec.order_cols,
-            )
-        else:
-            # default: pandas grouped-cython kernel, measured fastest.
-            # presorted: the window stage upstream already hash-partitioned
-            # by entity and sorted within partitions by (entity, ts, turn),
-            # so the kernel adds no shuffle or sort.
-            #
-            # POSITION IS LOAD-BEARING — the kernel must be the LAST
-            # per-entity stage: mapInPandas output has unknown partitioning
-            # to Catalyst, so any window stage placed after it re-exchanges
-            # on the entity (measured: a 3rd full-table shuffle). Running
-            # EWMA first was A/B'd for wide specs (59 metrics): the
-            # narrower Arrow payload won ~25% on a single membw-bound box,
-            # but it trades a second full shuffle of the corpus — network +
-            # spill at 10^12 rows — for executor-local Arrow bandwidth,
-            # which is the wrong direction at cluster scale. One exchange
-            # beats a thinner barrier.
+    if window_engine == "kernel":
+        df = window_features_ewma_kernel(df, spec, ewma_span=ewma_span or None)
+    else:
+        df = compile_window_features(df, spec)
+        if ewma_span:
+            # presorted: the window stage already hash-partitioned by entity
+            # and sorted by (entity, order), so with_ewma adds no exchange
             df = with_ewma(
                 df,
                 metrics=spec.metrics,

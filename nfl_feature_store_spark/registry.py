@@ -873,7 +873,7 @@ FROM s GROUP BY 1, 2
 
 def q28_ewma(spark: SparkSession, sf: str) -> DataFrame:
     """W5: span-10 adjust=False EWM of the lag-1 series per entity
-    (mapInPandas kernel — unbounded recursion, no ANSI window FRAME; oracled
+    (mapInArrow kernel — unbounded recursion, no ANSI window FRAME; oracled
     via a DuckDB recursive CTE that replays pandas' exact fp update)."""
     from nfl_feature_store_spark.operators.ewma import with_ewma
 

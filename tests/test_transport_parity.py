@@ -1,19 +1,15 @@
-"""Cross-transport parity for the Arrow-batched scan operators (round-4 advice).
-
-``with_ewma`` and ``elo_per_entity`` each offer two physical transports —
-``mapInArrow`` (default; passthrough columns stay Arrow buffers) and the
-original ``mapInPandas`` — with the docstring claim that results are
-identical, including leading-window NaN -> NULL conversion. These tests pin
-that claim: same values, same NULL mask, on data that exercises NULLs
-(leading rows, NaN outcomes) and a metric name that collides with an order
-column (the duplicate-projection crash fixed by the dict.fromkeys dedupe).
-"""
+"""The Arrow transport of ``with_ewma`` and ``elo_per_entity`` against
+expectations computed in pandas on the driver: leading-window NaN arrives
+as NULL, NaN outcomes skip the Elo update, the text payload rides through
+untouched, and a metric/outcome that is also an order column does not crash
+the projection (the dict.fromkeys dedupe)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
+
+KEY = ["conv_id", "ts", "turn_idx"]
 
 
 def _fixture(seed: int = 41) -> pd.DataFrame:
@@ -39,102 +35,104 @@ def _fixture(seed: int = 41) -> pd.DataFrame:
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     pdf["chars"] = pdf["text"].str.len().astype("float64")
     pdf["outcome"] = rng.integers(0, 2, len(pdf)).astype("float64")
-    # NaN outcomes: the elo scan must SKIP these without updating the rating,
-    # identically under both transports
+    # NaN outcomes: the elo scan must SKIP these without updating the rating
     pdf.loc[pdf.sample(frac=0.15, random_state=7).index, "outcome"] = np.nan
     return pdf
 
 
-def _assert_frames_equal(a: pd.DataFrame, b: pd.DataFrame, cols: list[str]) -> None:
-    a = a.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    b = b.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    for c in cols:
-        # identical NULL mask (leading-window NaN->NULL claim), then values
-        assert (a[c].isna().values == b[c].isna().values).all(), f"{c}: NULL masks differ"
-        np.testing.assert_allclose(
-            a[c].to_numpy(dtype=float), b[c].to_numpy(dtype=float),
-            rtol=0, atol=0, equal_nan=True, err_msg=c,
-        )
+def _sorted(pdf: pd.DataFrame) -> pd.DataFrame:
+    return pdf.sort_values(KEY, kind="mergesort").reset_index(drop=True)
+
+
+def _ewma_expected(pdf: pd.DataFrame, metric: str, span: int = 10) -> pd.Series:
+    s = _sorted(pdf)
+    return (
+        s.groupby("conv_id", sort=False)[metric]
+        .apply(lambda v: v.astype("float64").shift(1).ewm(span=span, adjust=False).mean())
+        .reset_index(drop=True)
+    )
+
+
+def _elo_expected(pdf: pd.DataFrame, outcome: str, k: float = 20.0, init: float = 1500.0) -> np.ndarray:
+    out = []
+    for _, g in _sorted(pdf).groupby("conv_id", sort=False):
+        r = init
+        for o in g[outcome].astype("float64"):
+            out.append(r)
+            if not np.isnan(o):
+                r = r + k * (o - 1.0 / (1.0 + 10.0 ** (-(r - init) / 400.0)))
+    return np.array(out)
 
 
 def test_ewma_transport_parity(spark):
+    """Values match pandas; the leading-window NaN of every conversation
+    arrives as a NULL, and the text payload is untouched."""
     from nfl_feature_store_spark.operators.ewma import with_ewma
 
-    sdf = spark.createDataFrame(_fixture())
-    outs = {
-        t: with_ewma(sdf, metrics=("chars", "outcome"), transport=t).toPandas()
-        for t in ("arrow", "pandas")
-    }
-    assert list(outs["arrow"].columns) == list(outs["pandas"].columns)
-    _assert_frames_equal(outs["arrow"], outs["pandas"], ["ewma_chars", "ewma_outcome"])
-    # text payload rides through untouched on both transports
-    _ = {
-        t: o.sort_values(["conv_id", "ts", "turn_idx"]) for t, o in outs.items()
-    }
-    assert (
-        outs["arrow"].sort_values(["conv_id", "ts", "turn_idx"])["text"].values
-        == outs["pandas"].sort_values(["conv_id", "ts", "turn_idx"])["text"].values
-    ).all()
+    pdf = _fixture()
+    out = with_ewma(spark.createDataFrame(pdf), metrics=("chars", "outcome"))
+    tbl = out.toArrow().sort_by([(k, "ascending") for k in KEY])
+    ref = _sorted(pdf)
+    assert tbl.column_names == list(pdf.columns) + ["ewma_chars", "ewma_outcome"]
+    for m in ("chars", "outcome"):
+        col = tbl.column(f"ewma_{m}")
+        want = _ewma_expected(pdf, m).to_numpy()
+        got = col.to_numpy(zero_copy_only=False)
+        # every missing EWMA is a NULL, never a NaN value
+        assert np.array_equal(col.is_null().to_numpy(zero_copy_only=False), np.isnan(want)), m
+        np.testing.assert_array_equal(got, want, err_msg=m)
+    first = (ref["turn_idx"] == ref.groupby("conv_id")["turn_idx"].transform("min")).to_numpy()
+    assert tbl.column("ewma_chars").is_null().to_numpy(zero_copy_only=False)[first].all()
+    assert tbl.column("text").to_pylist() == ref["text"].tolist()
 
 
 def test_elo_transport_parity(spark):
+    """NaN outcomes skip the rating update; values match a driver-side scan."""
     from nfl_feature_store_spark.operators.elo import elo_per_entity
 
-    sdf = spark.createDataFrame(_fixture(seed=43))
-    outs = {
-        t: elo_per_entity(sdf, outcome_col="outcome", transport=t).toPandas()
-        for t in ("arrow", "pandas")
-    }
-    assert list(outs["arrow"].columns) == list(outs["pandas"].columns)
-    _assert_frames_equal(outs["arrow"], outs["pandas"], ["elo_pre"])
+    pdf = _fixture(seed=43)
+    tbl = (
+        elo_per_entity(spark.createDataFrame(pdf), outcome_col="outcome")
+        .toArrow()
+        .sort_by([(k, "ascending") for k in KEY])
+    )
+    assert tbl.column("elo_pre").null_count == 0
+    np.testing.assert_allclose(
+        tbl.column("elo_pre").to_numpy(), _elo_expected(pdf, "outcome"), rtol=1e-12
+    )
+    assert tbl.column("text").to_pylist() == _sorted(pdf)["text"].tolist()
 
 
-@pytest.mark.parametrize("transport", ["arrow", "pandas"])
-def test_ewma_metric_coincides_with_order_col(spark, transport):
-    """A metric that is ALSO an order column must not crash the arrow
-    transport's projection (round-4 advice: duplicate names in
-    pa.Table.select made sub[m] a DataFrame)."""
+def test_ewma_metric_coincides_with_order_col(spark):
+    """A metric that is ALSO an order column must not crash the Arrow
+    projection (duplicate names in pa.Table.select made sub[m] a
+    DataFrame)."""
     from nfl_feature_store_spark.operators.ewma import with_ewma
 
     pdf = _fixture(seed=47)
-    sdf = spark.createDataFrame(pdf)
-    out = (
-        with_ewma(sdf, metrics=("turn_idx", "chars"), transport=transport)
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    ref = pdf.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    exp = (
-        ref.groupby("conv_id", sort=False)["turn_idx"]
-        .apply(lambda s: s.shift(1).ewm(span=10, adjust=False).mean())
-        .reset_index(drop=True)
-    )
+    out = _sorted(with_ewma(spark.createDataFrame(pdf), metrics=("turn_idx", "chars")).toPandas())
     np.testing.assert_allclose(
         out["ewma_turn_idx"].to_numpy(dtype=float),
-        exp.to_numpy(dtype=float),
+        _ewma_expected(pdf, "turn_idx").to_numpy(dtype=float),
         rtol=1e-12,
         equal_nan=True,
     )
 
 
-@pytest.mark.parametrize("transport", ["arrow", "pandas"])
-def test_elo_outcome_coincides_with_order_col(spark, transport):
+def test_elo_outcome_coincides_with_order_col(spark):
     """Same dedupe guarantee for elo_per_entity: ordering by the outcome
     column itself (degenerate but legal) must not produce a duplicate
     projection."""
     from nfl_feature_store_spark.operators.elo import elo_per_entity
 
     pdf = _fixture(seed=53).dropna(subset=["outcome"])
-    sdf = spark.createDataFrame(pdf)
-    out = elo_per_entity(
-        sdf,
-        outcome_col="turn_idx",
-        order_cols=("ts", "turn_idx"),
-        transport=transport,
-    ).toPandas()
-    assert out["elo_pre"].notna().all()
+    out = _sorted(
+        elo_per_entity(
+            spark.createDataFrame(pdf), outcome_col="turn_idx", order_cols=("ts", "turn_idx")
+        ).toPandas()
+    )
     assert len(out) == len(pdf)
+    np.testing.assert_allclose(out["elo_pre"].to_numpy(), _elo_expected(pdf, "turn_idx"), rtol=1e-12)
 
 
 def test_simhash_null_text_matches_empty(spark):
