@@ -25,16 +25,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def spread(df: DataFrame, *key_cols: str, target: int | None = None) -> DataFrame:
-    """Raise a low-parallelism input to ``target`` partitions (default: the
-    session's ``sparkContext.defaultParallelism``) by hash-repartitioning on
+def spread(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Raise a low-parallelism input to the session's
+    ``sparkContext.defaultParallelism`` partitions by hash-repartitioning on
     ``key_cols``; pass through unchanged when the input already plans at
     least that many partitions (or is a streaming DataFrame, where physical
     partitioning is the source's concern)."""
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    n = target or sc.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, *[F.col(c) for c in key_cols])

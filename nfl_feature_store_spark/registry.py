@@ -1218,7 +1218,7 @@ def q38_salted_ewm(spark: SparkSession, sf: str) -> DataFrame:
     recursive CTE (Q28): the salted path must reproduce the unsalted
     definition, and its carry merge is exact enough to hash-match at 6
     decimals; bit-near parity is also pytest-pinned
-    (tests/test_salted_multimodal.py)."""
+    (tests/test_salted.py)."""
     from nfl_feature_store_spark.operators.salted import salted_ewm
     from nfl_feature_store_spark.plans.layout import spread
 
@@ -1728,9 +1728,10 @@ FROM fine f JOIN coarse c ON f.user_id = c.user_id AND f.fs <= c.ce AND c.cs <= 
 
 #: DuckDB fragment == operators/sampling.py _bucket1000 / shard hash:
 #: md5_number_lower(key || '#seed') is bit-identical to the engine's
-#: conv(reversed-hex) unsigned decimal (tests/test_portable_hash.py)
+#: conv(reversed-hex) unsigned decimal (tests/test_portable_hash.py).
+#: Parenthesized so a trailing ``::BIGINT`` casts the bucket, not ``mod``.
 def _duck_bucket(key_sql: str, seed: int, mod: int) -> str:
-    return f"md5_number_lower({key_sql} || '#' || '{seed}') % {mod}"
+    return f"(md5_number_lower({key_sql} || '#' || '{seed}') % {mod})"
 
 
 def q51_deterministic_sample(spark: SparkSession, sf: str) -> DataFrame:

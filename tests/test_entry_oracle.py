@@ -1,11 +1,15 @@
-"""Local replica of the driver's correctness gate: run every queries() entry
-at sf0.01 and compare against oracle_sql() through DuckDB — row count, column
-names, and order-insensitive value equality."""
+"""The correctness gate for ``__spark_entry__``: run every queries() entry at
+sf0.01 and compare it with its oracle_sql() through DuckDB — row count,
+column names, and an md5 hash of the values.
+
+The hash takes the columns sorted by name and the rows sorted, rounds float
+columns to 6 decimals and stringifies every value, so a dtype change (``1``
+against ``1.0``) fails the gate just as a wrong value does."""
 
 from __future__ import annotations
 
+import hashlib
 import importlib.util
-import math
 import os
 
 import duckdb
@@ -35,17 +39,18 @@ def duck():
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
+    df = df[sorted(df.columns)]
+    df = df.sort_values(list(df.columns)).reset_index(drop=True)
+    return pd.DataFrame(
+        {c: (df[c].round(6) if df[c].dtype.kind == "f" else df[c]).astype(str) for c in df.columns}
+    )
 
-    def norm(v):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return "∅"
-        if isinstance(v, float):
-            return f"{v:.9g}"
-        return str(v)
 
-    key = df.apply(lambda row: "|".join(norm(v) for v in row), axis=1)
-    return df.assign(__key=key).sort_values("__key", kind="mergesort").reset_index(drop=True)
+def _value_hash(canon: pd.DataFrame) -> str:
+    h = hashlib.md5()
+    for c in canon.columns:
+        h.update(canon[c].str.cat(sep="\x01").encode())
+    return h.hexdigest()
 
 
 ORACLED = sorted(_entry.oracle_sql().keys())
@@ -62,22 +67,12 @@ def test_query_matches_oracle(spark, duck, name):
     )
     assert len(got) == len(exp), f"{name}: rows {len(got)} vs {len(exp)}"
     g, e = _canon(got), _canon(exp)
-    mism = (g["__key"] != e["__key"]).to_numpy().nonzero()[0]
-    assert len(mism) == 0, (
+    mism = (g != e).any(axis=1).to_numpy().nonzero()[0]
+    assert _value_hash(g) == _value_hash(e), (
         f"{name}: {len(mism)} mismatched rows; first:\n"
-        f"spark: {g.iloc[mism[0]].to_dict()}\n"
-        f"duck : {e.iloc[mism[0]].to_dict()}"
+        f"spark: {g.iloc[mism[0]].to_dict()} {got.dtypes.to_dict()}\n"
+        f"duck : {e.iloc[mism[0]].to_dict()} {exp.dtypes.to_dict()}"
     )
-
-
-ROWS_ONLY = sorted(set(_entry.queries()) - set(ORACLED))
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, name):
-    df = _entry.queries()[name](spark, SF_DIR)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
 
 
 def test_entry_smoke(spark):
