@@ -8,9 +8,10 @@ Not a port: the reference is a single-threaded pandas ETL
 (reference feature_store_runner.py, src/pumps/player_game.py); this engine
 expresses the same verified semantics (SURVEY.md §2) as Catalyst-planned
 DataFrame operations — window frames for lag/rolling/expanding families,
-union+last(ignorenulls) for the as-of backfill join, applyInPandas/Arrow for
-the two genuinely sequential recurrences (EWM, Elo) — with explicit
-partitioning, salting and skew handling for scale.
+union+last(ignorenulls) for the as-of backfill join, and ``mapInArrow``
+kernels for the window families and the two genuinely sequential
+recurrences (EWM, Elo) — with explicit partitioning, salting and skew
+handling for scale.
 """
 
 from nfl_feature_store_spark.session import get_spark

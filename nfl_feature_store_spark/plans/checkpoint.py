@@ -40,6 +40,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 
 class PartitionManifest:
@@ -72,7 +73,15 @@ class PartitionManifest:
 class ParquetDirSink:
     """Parquet-directory sink: ``{out_dir}/{partition_col}={p}`` with
     mode=overwrite — an atomic per-partition replace (the reference's
-    put_dataframe-per-season, feature_store_runner.py:54-55)."""
+    put_dataframe-per-season, feature_store_runner.py:54-55).
+
+    Float and double columns are written without dictionary pages. Feature
+    values are mostly distinct, so a dictionary costs CPU to build and
+    saves nothing once zstd compresses the pages. On a cached 5,674-row x
+    423-column day (410 doubles, 4 tasks, 4-core host, median of 6 writes)
+    dropping it cut a write from 0.79 to 0.63 s, its JVM CPU from 2.60 to
+    1.94 s and the files from 9.79 to 9.28 MB. String and integer columns (ids, roles,
+    counts) repeat and keep their dictionaries."""
 
     def __init__(self, out_dir: str, partition_col: str = "part"):
         self.out_dir = out_dir
@@ -80,7 +89,12 @@ class ParquetDirSink:
 
     def write_partition(self, df: DataFrame, partition: str) -> dict:
         dest = os.path.join(self.out_dir, f"{self.partition_col}={partition}")
-        df.write.mode("overwrite").parquet(dest)
+        plain = {
+            f"parquet.enable.dictionary#{f.name}": "false"
+            for f in df.schema.fields
+            if isinstance(f.dataType, (FloatType, DoubleType))
+        }
+        df.write.options(**plain).mode("overwrite").parquet(dest)
         n_bytes = sum(
             os.path.getsize(os.path.join(dest, f))
             for f in os.listdir(dest)

@@ -10,6 +10,7 @@ on a real cluster this is overridden to ~2-3x total cores.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -23,8 +24,20 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for the feature-engine workload.
 
     AQE handles runtime coalescing and skew-join splitting; Arrow is enabled
-    for the applyInPandas kernels (EWM/Elo); timestamps are UTC so oracle
-    comparisons (DuckDB) and the pandas referee agree bit-for-bit.
+    for the ``mapInArrow`` kernels (the window kernel, EWMA, Elo);
+    timestamps are UTC so oracle comparisons (DuckDB) and the pandas
+    referee agree bit-for-bit.
+
+    Python workers of a local session run under
+    :mod:`nfl_feature_store_spark.daemon` (``spark.python.daemon.module``),
+    which stops pyspark from re-reading every zip archive on the worker path
+    at the start of each task. An identity ``mapInArrow`` over 400 rows in 4
+    tasks on ``local[4]`` took 0.38-0.57 s with the stock daemon, 0.19-0.21 s
+    with this one and 0.06-0.09 s for the same job without Python (4-core
+    host, CPython 3.11). The daemon is only chosen when a worker started from
+    this process's directory and ``PYTHONPATH`` finds the package (see
+    :func:`_workers_find_package`); on a cluster, or otherwise, the workers
+    keep ``pyspark.daemon``. ``extra_conf`` overrides either choice.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -69,8 +82,23 @@ def get_spark(
         # and synthetic low-entropy text understates the real-corpus gain
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
+    if (master == "local" or master.startswith("local[")) and _workers_find_package():
+        builder = builder.config("spark.python.daemon.module", "nfl_feature_store_spark.daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _workers_find_package() -> bool:
+    """Whether a local Python worker can import this package before any task
+    runs. Spark starts the worker daemon as ``python -m <module>`` in this
+    process's working directory with its ``PYTHONPATH`` (plus Spark's own
+    archives), so the package must sit in one of those directories or in
+    site-packages. A package put on ``sys.path`` only at run time is not
+    seen there, and a daemon that cannot be imported fails every Python
+    task."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    return any(d and os.path.abspath(d) == root for d in dirs)
