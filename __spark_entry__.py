@@ -21,22 +21,11 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: full strictly-past feature backfill (lag, rolling-3/10,
     expanding, two-anchor session-avg, EWMA, gap/sessionize, per-day rank)
     over the sf0.001 events stream viewed as transcripts."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     from nfl_feature_store_spark.plans.pipeline import backfill_features
+    from nfl_feature_store_spark.sources.transcripts import events_as_transcripts
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    transcripts = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.coalesce(F.col("props"), F.lit("")).alias("text"),
-        F.when(F.col("event_type") == "error", F.lit("debugger")).otherwise(F.lit("")).alias("tool"),
-        F.col("ts"),
-    )
-    return backfill_features(transcripts)
+    return backfill_features(events_as_transcripts(ev))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,39 +1,25 @@
 #!/usr/bin/env python3
-"""Benchmark harness.
+"""Headline benchmark.
 
-Default mode (what the round driver runs): executes the headline queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+Executes the headline queries on the data directory ``$SPARK_GRAFT_SF_DIR``
+(default: the sf0.1 test data) on ``local[$SPARK_GRAFT_CPUS]`` (default:
+every CPU of the host) and prints ONE JSON line::
 
     {"metric": "headline_total_sec", "value": N, "unit": "sec",
      "queries": {"flagship_backfill": sec, ...}, "sf": 0.1,
-     "backfill_turns_per_sec": N, "cores": 32}
+     "backfill_turns_per_sec": N, "cores": 4}
 
-Scaling mode (``--scaling``): generates a deterministic ~80M-turn transcript
-corpus once (size via $SPARK_GRAFT_SCALE_CONVS), then runs the flagship
-backfill in two SEPARATE, taskset-pinned JVMs at the core pair from
-$SPARK_GRAFT_SCALE_CORES (default "8,32" — the sandbox stand-in for N vs 4N
-executors, per BASELINE.md), with $SPARK_GRAFT_COOLDOWN seconds of idle
-before each child (the host throttles sustained load — see
-BENCH/BASELINE.md appendix). Each child reports a host-throttle calibration
-number alongside its timing. Reports throughput at both and the scaling
-efficiency (tp_hi / tp_lo) / (hi / lo); set SPARK_GRAFT_WRITE_MD=1 to let it
-rewrite the hand-curated BENCH/BASELINE.md.
-
-Stages mode (``--stages``): per-stage Amdahl probe at both core counts on a
-smaller (~20M-turn) corpus — cumulative times for scan → sessionize →
-windows → full backfill, isolating the bandwidth-bound scan from the
-thread-scaling stages.
-
-Every timed query is materialized through the noop sink so ALL columns are
-computed (a bare count() would let Catalyst prune the feature expressions).
+``sf`` is read from the ``sf<scale>`` directory name. Every timed query is
+materialized through the noop sink so ALL columns are computed (a bare
+count() would let Catalyst prune the feature expressions). The gated,
+layer-by-layer benchmark is ``perfbench/``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import re
 import sys
 import time
 
@@ -41,31 +27,16 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# ~80M turns (4x round 1): a bigger W shrinks the fixed term s in the Amdahl
-# ratio; the host replenishes a CPU-quota budget, so runs must still stay
-# bounded or later iterations execute throttled and poison the comparison
-SCALING_CONVS = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "2000000"))
-SCALING_CORPUS = os.environ.get(
-    "SPARK_GRAFT_SCALE_CORPUS",
-    f"/tmp/spark_graft_bench/transcripts_{SCALING_CONVS}.parquet",
-)
-# per-stage probes run on a smaller corpus so the slow local[8] prefix
-# measurements stay inside the host's unthrottled window
-STAGES_CONVS = int(os.environ.get("SPARK_GRAFT_STAGE_CONVS", "500000"))
-STAGES_CORPUS = f"/tmp/spark_graft_bench/transcripts_{STAGES_CONVS}.parquet"
-COOLDOWN_S = int(os.environ.get("SPARK_GRAFT_COOLDOWN", "120"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
 
 
-def _calibrate() -> float:
-    """Host-throttle canary: a 20M-iteration pure-Python loop runs ~2.9s on
-    a cool host and >5s when the CPU quota is drained (BENCH/BASELINE.md
-    appendix). Recorded with every measurement for disclosure."""
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(20_000_000):
-        x += i
-    return round(time.perf_counter() - t0, 2)
+def scale_factor(sf_dir: str) -> float:
+    """The scale of an ``sf<scale>`` data directory, e.g. 1.0 for ``.../sf1.0``."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(os.path.normpath(sf_dir)))
+    if m is None:
+        raise ValueError(f"data directory {sf_dir!r} is not named sf<scale>")
+    return float(m.group(1))
+
 
 # headline set: the flagship product pipeline + one representative of each
 # expensive operator class from the registry
@@ -80,7 +51,7 @@ HEADLINE = [
     "q24_ngram_jaccard",     # shingle self-join
     "q25_cosine_topk",       # embedding similarity
     "q27_session_avg_two_anchor",  # two-anchor window
-    "q28_ewma",              # applyInPandas kernel
+    "q28_ewma",              # mapInArrow kernel
     "q29_elo",               # sequential rating kernel
     "q53_contamination",     # cross-split LSH candidate join (round 5)
     "q57_tfidf_topterms",    # explode + double agg + broadcast-back + window (round 5)
@@ -108,6 +79,7 @@ def run_headline(cores: int) -> dict:
     from nfl_feature_store_spark.registry import QUERIES
     from nfl_feature_store_spark.session import get_spark
 
+    sf = scale_factor(SF_DIR)
     spark = get_spark(app_name="bench", master=f"local[{cores}]", shuffle_partitions=cores)
     _warm(spark, cores)
 
@@ -115,20 +87,12 @@ def run_headline(cores: int) -> dict:
 
     # flagship: full transcript feature backfill over the events stream
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from nfl_feature_store_spark.plans.pipeline import backfill_features
+    from nfl_feature_store_spark.sources.transcripts import events_as_transcripts
 
     ev = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    transcripts = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.coalesce(F.col("props"), F.lit("")).alias("text"),
-        F.when(F.col("event_type") == "error", F.lit("debugger")).otherwise(F.lit("")).alias("tool"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
+    transcripts = events_as_transcripts(ev)
     n_turns = ev.count()
 
     def best_of(n: int, make_df) -> float:
@@ -180,7 +144,6 @@ def run_headline(cores: int) -> dict:
         timings[name] = best_of(2, lambda q=QUERIES[name]: q(spark, SF_DIR))
 
     total = round(sum(timings.values()), 3)
-    sf = 0.1 if "sf0.1" in SF_DIR else (0.01 if "sf0.01" in SF_DIR else 0.001)
     return {
         "metric": "headline_total_sec",
         "value": total,
@@ -192,300 +155,5 @@ def run_headline(cores: int) -> dict:
     }
 
 
-def _gen_corpus(path: str, n_convs: int) -> None:
-    if os.path.exists(path):
-        return
-    from nfl_feature_store_spark.session import get_spark
-    from nfl_feature_store_spark.sources.transcripts import gen_transcripts_distributed
-
-    spark = get_spark(app_name="gen", master="local[32]", shuffle_partitions=64)
-    df = gen_transcripts_distributed(spark, n_convs=n_convs, avg_turns=33, seed=42, partitions=64)
-    df.write.mode("overwrite").parquet(path)
-    spark.stop()
-
-
-def _warm_plan(spark, corpus: str) -> None:
-    """Warm the FLAGSHIP plan's one-time driver/JVM costs before measuring:
-    whole-stage-codegen compilation (Janino) and C2 JIT of the window/sort
-    paths, plus the full-width parquet scan stage. Measured on this host:
-    first execution of the backfill plan carries ~2-5s of compile that
-    subsequent executions of the same plan shape do not — cost a long-lived
-    cluster pays once per plan shape, not per job, so the measured run
-    excludes it (disclosed in BENCH/BASELINE.md)."""
-    from nfl_feature_store_spark.plans.pipeline import backfill_features
-    from nfl_feature_store_spark.sources.transcripts import gen_transcripts_distributed
-
-    tiny = gen_transcripts_distributed(spark, n_convs=1500, avg_turns=20, seed=7, partitions=4)
-    _noop(backfill_features(tiny, rank_metric=None))
-    # full-width scan + ColumnarToRow codegen over the real file schema
-    _noop(spark.read.parquet(corpus).limit(50_000))
-
-
-def run_scaling_child(cores: int) -> None:
-    """Child process: backfill the fixed corpus once, print JSON."""
-    from nfl_feature_store_spark.plans.pipeline import backfill_features
-    from nfl_feature_store_spark.session import get_spark
-
-    calib = _calibrate()
-    spark = get_spark(
-        app_name=f"scale{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=cores * 3,  # ~2 extra waves smooth stragglers
-        extra_conf={"spark.driver.memory": "48g"},
-    )
-    _warm(spark, cores)
-    _warm_plan(spark, SCALING_CORPUS)
-    df = spark.read.parquet(SCALING_CORPUS)
-    n = df.count()
-    # single iteration: the host throttles sustained load, so a second
-    # back-to-back run executes in a throttled regime and reads slower
-    t0 = time.perf_counter()
-    _noop(backfill_features(df, rank_metric=None))
-    dt = time.perf_counter() - t0
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "turns": n,
-                "sec": round(dt, 3),
-                "turns_per_sec": round(n / dt, 1),
-                "calib_sec": calib,
-            }
-        )
-    )
-    spark.stop()
-
-
-BUCKETED_TABLE = f"scale_bucketed_{SCALING_CONVS}"
-BUCKETED_BUCKETS = 96
-
-
-def _ensure_bucketed() -> None:
-    """One-time bucketed+sorted ingestion of the scaling corpus — the
-    production layout (Iceberg bucket(conv_id) transform stand-in). Cost is
-    paid once at ingestion and amortized over every backfill; excluded from
-    the measured runs and disclosed in BENCH/BASELINE.md."""
-    path = os.path.join(REPO, "spark-warehouse", BUCKETED_TABLE)
-    if os.path.exists(path):
-        return
-    from nfl_feature_store_spark.session import get_spark
-    from nfl_feature_store_spark.sources.bucketed import write_bucketed_transcripts
-
-    spark = get_spark(app_name="ingest", master="local[32]", shuffle_partitions=64)
-    write_bucketed_transcripts(
-        spark.read.parquet(SCALING_CORPUS), BUCKETED_TABLE, buckets=BUCKETED_BUCKETS
-    )
-    spark.stop()
-
-
-def run_scaling_bucketed_child(cores: int) -> None:
-    """Child: backfill straight off the bucketed table — zero data
-    exchanges (the catalog's bucket metadata satisfies every downstream
-    ClusteredDistribution). The in-memory catalog forgets tables between
-    processes, so the child re-declares the SAME files as an external
-    bucketed table via DDL."""
-    import re
-
-    from nfl_feature_store_spark.plans.pipeline import backfill_features
-    from nfl_feature_store_spark.session import get_spark
-
-    calib = _calibrate()
-    spark = get_spark(
-        app_name=f"scaleb{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=cores * 3,
-        extra_conf={"spark.driver.memory": "48g"},
-    )
-    _warm(spark, cores)
-    _warm_plan(spark, SCALING_CORPUS)
-    loc = os.path.join(REPO, "spark-warehouse", BUCKETED_TABLE)
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {BUCKETED_TABLE} "
-        "(conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP) "
-        f"USING PARQUET CLUSTERED BY (conv_id) SORTED BY (conv_id, ts, turn_idx) "
-        f"INTO {BUCKETED_BUCKETS} BUCKETS LOCATION '{loc}'"
-    )
-    df = spark.table(BUCKETED_TABLE)
-    n = df.count()
-    feats = backfill_features(df, rank_metric=None)
-    t0 = time.perf_counter()
-    _noop(feats)
-    dt = time.perf_counter() - t0
-    plan = feats._jdf.queryExecution().executedPlan().toString()
-    exchanges = re.findall(r"Exchange hashpartitioning", plan)
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "turns": n,
-                "sec": round(dt, 3),
-                "turns_per_sec": round(n / dt, 1),
-                "calib_sec": calib,
-                "data_exchanges": len(exchanges),
-            }
-        )
-    )
-    spark.stop()
-
-
-def run_stages_child(cores: int) -> None:
-    """Per-stage Amdahl probe on the smaller stage corpus: materialize
-    successive pipeline prefixes through the noop sink; stage costs are the
-    deltas. Isolates the bandwidth-bound scan from the thread-scaling
-    window/EWMA stages (round-2 VERDICT ask #7)."""
-    from nfl_feature_store_spark.functions.turn_metrics import dedup_latest, with_turn_metrics
-    from nfl_feature_store_spark.operators.sessionize import sessionize
-    from nfl_feature_store_spark.operators.windows import FeatureSpec, compile_window_features
-    from nfl_feature_store_spark.plans.pipeline import backfill_features
-    from nfl_feature_store_spark.session import get_spark
-
-    calib = _calibrate()
-    spark = get_spark(
-        app_name=f"stages{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=cores * 3,
-        extra_conf={"spark.driver.memory": "48g"},
-    )
-    _warm(spark, cores)
-    _warm_plan(spark, STAGES_CORPUS)
-    df = spark.read.parquet(STAGES_CORPUS)
-    n = df.count()
-    gap = int(os.environ.get("SPARK_GRAFT_STAGE_GAP", "90"))
-
-    def timed(make):
-        time.sleep(gap)  # replenish the host CPU-quota budget between probes
-        t0 = time.perf_counter()
-        _noop(make())
-        return round(time.perf_counter() - t0, 3)
-
-    spec = FeatureSpec()
-    prefix_sess = lambda: sessionize(with_turn_metrics(dedup_latest(df)))  # noqa: E731
-    prefix_wins = lambda: compile_window_features(prefix_sess(), spec)  # noqa: E731
-    # most expensive probe first (coolest budget); scan is bandwidth-bound
-    # and cheap, so it tolerates going last
-    t = {}
-    t["full_with_ewma"] = timed(lambda: backfill_features(df, rank_metric=None))
-    t["thru_windows"] = timed(prefix_wins)
-    t["thru_sessionize"] = timed(prefix_sess)
-    t["scan"] = timed(lambda: df)
-    print(json.dumps({"cores": cores, "turns": n, "stages_cum_sec": t, "calib_sec": calib}))
-    spark.stop()
-
-
-SCALE_PAIR = tuple(
-    int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_CORES", "8,32").split(",")
-)
-
-
-CHILD_TIMEOUT_S = int(os.environ.get("SPARK_GRAFT_CHILD_TIMEOUT", "900"))
-
-
-def _run_child(mode: str, cores: int) -> dict:
-    time.sleep(COOLDOWN_S)  # let the host CPU-quota budget replenish
-    # pin the child to exactly N host CPUs: without this the "8-core" run
-    # borrows extra cores for GC/python workers/shuffle threads and
-    # overstates the N-core baseline
-    cmd = [sys.executable, os.path.abspath(__file__), mode, str(cores)]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["/usr/bin/taskset", "-c", f"0-{cores - 1}"] + cmd
-    try:
-        out = subprocess.run(
-            cmd, capture_output=True, text=True, check=True, cwd=REPO, timeout=CHILD_TIMEOUT_S
-        )
-        res = json.loads([l for l in out.stdout.splitlines() if l.startswith("{")][-1])
-    except subprocess.TimeoutExpired:
-        # the host's wide-parallel membw window can be degraded 10x+ (see
-        # BENCH/BASELINE.md appendix); a hung child must not eat the sibling's
-        # capture — record the failure honestly and move on
-        res = {"cores": cores, "timeout_sec": CHILD_TIMEOUT_S, "error": "child_timeout"}
-    # stream each child's result as it lands so a later failure or kill
-    # cannot lose an earlier measurement
-    print(json.dumps({"child": res}), file=sys.stderr, flush=True)
-    return res
-
-
-def _warm_page_cache(path: str) -> None:
-    """Read the corpus once so children measure engine throughput, not the
-    VM's drifting virtual-disk quota (measured 41 MB/s cold in round 2); a
-    real cluster reads from provisioned distributed storage."""
-    for root, _, files in os.walk(path, followlinks=True):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                with open(os.path.join(root, f), "rb") as fh:
-                    while fh.read(1 << 22):
-                        pass
-
-
-def run_scaling() -> dict:
-    _gen_corpus(SCALING_CORPUS, SCALING_CONVS)
-    _warm_page_cache(SCALING_CORPUS)
-    results = {c: _run_child("--scaling-child", c) for c in SCALE_PAIR}
-    lo, hi = SCALE_PAIR
-    summary = {f"local{lo}": results[lo], f"local{hi}": results[hi]}
-    if "turns_per_sec" in results[lo] and "turns_per_sec" in results[hi]:
-        tp_lo, tp_hi = results[lo]["turns_per_sec"], results[hi]["turns_per_sec"]
-        summary["scaling_efficiency"] = round((tp_hi / tp_lo) / (hi / lo), 3)
-        if os.environ.get("SPARK_GRAFT_WRITE_MD", "0") == "1":
-            _write_bench_md(
-                {"local8": results[lo], "local32": results[hi],
-                 "scaling_efficiency": summary["scaling_efficiency"]}
-            )  # BENCH/BASELINE.md is otherwise hand-curated
-    return summary
-
-
-def run_stages() -> dict:
-    _gen_corpus(STAGES_CORPUS, STAGES_CONVS)
-    _warm_page_cache(STAGES_CORPUS)
-    return {c: _run_child("--stages-child", c) for c in SCALE_PAIR}
-
-
-def _write_bench_md(s: dict) -> None:
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(
-            "# BENCH/BASELINE — measured engine numbers\n\n"
-            "Scaling evidence (BASELINE.json north rule: throughput scaling efficiency\n"
-            ">= 0.8 from N to 4N executors; sandbox stand-in: same job, same input, two\n"
-            "parallelism levels local[8] vs local[32]):\n\n"
-            "| config | turns | sec | turns/sec |\n|---|---|---|---|\n"
-            f"| local[8] (N) | {s['local8']['turns']} | {s['local8']['sec']} | {s['local8']['turns_per_sec']} |\n"
-            f"| local[32] (4N) | {s['local32']['turns']} | {s['local32']['sec']} | {s['local32']['turns_per_sec']} |\n\n"
-            f"**Scaling efficiency (tp_4N / tp_N) / 4 = {s['scaling_efficiency']}**\n\n"
-            "Job: full point-in-time feature backfill (dedup -> turn metrics ->\n"
-            "sessionize -> lag/form/roll10/expanding/session-avg windows -> EWMA) over a\n"
-            "deterministic ~2M-turn synthetic transcript corpus (fixed parquet input,\n"
-            "identical for both runs; results partitioning-invariant per tests).\n\n"
-            "Reference baseline: the reference engine is single-threaded pandas with no\n"
-            "published numbers (see BASELINE.md); its corpus (374k rows) is ~5000x\n"
-            "smaller than this benchmark input.\n"
-        )
-
-
-def run_scaling_bucketed() -> dict:
-    _gen_corpus(SCALING_CORPUS, SCALING_CONVS)
-    _ensure_bucketed()
-    _warm_page_cache(os.path.join(REPO, "spark-warehouse", BUCKETED_TABLE))
-    results = {c: _run_child("--scaling-bucketed-child", c) for c in SCALE_PAIR}
-    lo, hi = SCALE_PAIR
-    summary = {f"local{lo}": results[lo], f"local{hi}": results[hi]}
-    if "turns_per_sec" in results[lo] and "turns_per_sec" in results[hi]:
-        tp_lo, tp_hi = results[lo]["turns_per_sec"], results[hi]["turns_per_sec"]
-        summary["scaling_efficiency"] = round((tp_hi / tp_lo) / (hi / lo), 3)
-    return summary
-
-
 if __name__ == "__main__":
-    if "--scaling-child" in sys.argv:
-        run_scaling_child(int(sys.argv[sys.argv.index("--scaling-child") + 1]))
-    elif "--scaling-bucketed-child" in sys.argv:
-        run_scaling_bucketed_child(int(sys.argv[sys.argv.index("--scaling-bucketed-child") + 1]))
-    elif "--scaling-bucketed" in sys.argv:
-        print(json.dumps(run_scaling_bucketed()))
-    elif "--stages-child" in sys.argv:
-        run_stages_child(int(sys.argv[sys.argv.index("--stages-child") + 1]))
-    elif "--scaling" in sys.argv:
-        print(json.dumps(run_scaling()))
-    elif "--stages" in sys.argv:
-        print(json.dumps(run_stages()))
-    else:
-        print(json.dumps(run_headline(CPUS)))
+    print(json.dumps(run_headline(CPUS)))

@@ -68,7 +68,6 @@ class FeatureSpec:
     expanding: bool = True
     session_anchored: bool = True
     session_col: str = "session_id"
-    protected_metrics: tuple[str, ...] = ()  # stay NULL, never zero-filled (P9 analog)
 
 
 def _entity_window(spec: FeatureSpec) -> WindowSpec:

@@ -1,5 +1,6 @@
 from nfl_feature_store_spark.sources.transcripts import (
     TRANSCRIPT_SCHEMA,
+    events_as_transcripts,
     gen_transcripts_distributed,
     gen_transcripts_pdf,
     transcripts_from_pandas,
@@ -10,6 +11,7 @@ from nfl_feature_store_spark.sources.bucketed import read_bucketed_transcripts, 
 
 __all__ = [
     "TRANSCRIPT_SCHEMA",
+    "events_as_transcripts",
     "gen_transcripts_pdf",
     "gen_transcripts_distributed",
     "transcripts_from_pandas",

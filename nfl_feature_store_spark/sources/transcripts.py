@@ -5,15 +5,18 @@ multi-turn conversation transcripts with columns
 ``(conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
 ts:timestamp)``.
 
-Two generators:
+One view and two generators:
 
+* :func:`events_as_transcripts` — the benchmark ``events`` table viewed as
+  transcripts: the flagship input of ``__spark_entry__.entry`` and
+  ``bench.py``.
 * :func:`gen_transcripts_pdf` — small, seeded pandas generator used by both
   the pandas referee and the Spark engine in tests, so golden comparisons are
   bit-exact (FIXTURES.md F1: Zipf-skewed conversation sizes, 3% session gaps,
   unicode/empty/newline text cases, duplicate-delivery rows).
 * :func:`gen_transcripts_distributed` — pure column-expression generator over
   ``spark.range`` that scales to billions of turns with zero driver-side
-  data, used for throughput/scaling benchmarks. Deterministic given (seed,
+  data, for corpora larger than the pandas fixture. Deterministic given (seed,
   n_convs): every value is a hash function of (conv_id, turn_idx).
 
 The reference's analogous source is an HTTP play-by-play fetch per season
@@ -116,6 +119,23 @@ def gen_transcripts_pdf(
     return pdf.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(drop=True)
 
 
+def events_as_transcripts(events: DataFrame) -> DataFrame:
+    """The ``events`` table (``event_id, ts, user_id, event_type, props``)
+    viewed as transcripts: one conversation per user, turns numbered by
+    ``(ts, event_id)``, ``error`` events as ``debugger`` tool turns. ``ts``
+    is cast to the ``TIMESTAMP`` that :data:`TRANSCRIPT_SCHEMA` declares (the
+    parquet column is ``TIMESTAMP_NTZ``)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return events.select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
+        F.col("event_type").alias("role"),
+        F.coalesce(F.col("props"), F.lit("")).alias("text"),
+        F.when(F.col("event_type") == "error", F.lit("debugger")).otherwise(F.lit("")).alias("tool"),
+        F.col("ts").cast("timestamp").alias("ts"),
+    )
+
+
 def transcripts_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
     """Pandas fixture → Spark DataFrame with the canonical schema."""
     return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
@@ -132,7 +152,7 @@ def gen_transcripts_distributed(
 
     Every column is a pure expression of ``(conv_seq, turn_idx)`` via xxhash64,
     so the same (seed, n_convs, avg_turns) always yields the same table at any
-    parallelism — the property the local[8]-vs-local[32] scaling runs rely on.
+    parallelism.
     Turn counts follow an approximate power law (hash-driven) for realistic
     conversation-size skew.
     """

@@ -76,5 +76,11 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_entry_smoke(spark):
+    from nfl_feature_store_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
     df = _entry.entry(spark)
-    assert df.count() > 0
+    types = {f.name: f.dataType for f in df.schema.fields}
+    for f in TRANSCRIPT_SCHEMA.fields:
+        assert types.get(f.name) == f.dataType, (f.name, types.get(f.name))
+    # one output row per sf0.001 event
+    assert df.count() == 1000
