@@ -116,9 +116,7 @@ def bpe_token_count_expr(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(BPE_ISH_PATTERN)).cast("int")
 
 
-def winnow_fingerprints(
-    col: Column | str, k: int = 8, w: int = 4, hash_fn: str = "xxhash64"
-) -> Column:
+def winnow_fingerprints(col: Column | str, k: int = 8, w: int = 4) -> Column:
     """Winnowing document fingerprints (Schleimer et al.'s rolling-hash
     selection): hash every k-gram, take the min hash of each window of ``w``
     consecutive k-gram hashes, dedupe. Two documents sharing a substring of
@@ -126,11 +124,11 @@ def winnow_fingerprints(
     local-similarity sketch for plagiarism/near-dup detection.
 
     Pure higher-order column algebra (transform + slice + array_min), no
-    explode, no UDF. ``hash_fn="xxhash64"`` (production default) yields
-    array<bigint> and a rows-only driver check; ``hash_fn="md5"`` yields
-    array<string> of hex digests — lexicographic min == unsigned numeric
-    min, identical in DuckDB, so the pipeline gains a full value-hash
-    oracle (operators/dedup.py module docstring).
+    explode, no UDF. Grams hash with md5 and the result is array<string>
+    of hex digests: lexicographic min == unsigned numeric min, identical in
+    DuckDB, so the operator has a full value-hash oracle (q44; module
+    docstring of operators/dedup.py). This is the reference formulation the
+    :func:`winnow_fingerprints_table` kernel is parity-pinned against.
 
     Evaluation-count discipline (round-6): a non-lambda-variable
     subexpression referenced inside a higher-order lambda is RE-EVALUATED
@@ -142,9 +140,6 @@ def winnow_fingerprints(
     lowered once and every gram is hashed once; cost is back to
     O(len·w) array ops + O(len) hash calls."""
     raw = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    gram_hash = F.xxhash64 if hash_fn == "xxhash64" else F.md5
 
     def windows_of(h):  # h: bound gram-hash array (evaluated once)
         n_windows = F.greatest(F.size(h) - F.lit(w - 1), F.lit(1))
@@ -155,7 +150,7 @@ def winnow_fingerprints(
     def mins_of(t):  # t: bound lowered text (evaluated once)
         n_grams = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
         hashes = F.transform(
-            F.sequence(F.lit(1), n_grams), lambda i: gram_hash(t.substr(i, F.lit(k)))
+            F.sequence(F.lit(1), n_grams), lambda i: F.md5(t.substr(i, F.lit(k)))
         )
         return F.element_at(F.transform(F.array(hashes), windows_of), 1)
 
@@ -169,35 +164,27 @@ def winnow_fingerprints_table(
     text_col: str,
     k: int = 8,
     w: int = 4,
-    hash_fn: str = "xxhash64",
     out_col: str = "fps",
 ):
-    """(id, fps) — table-level winnowing with a vectorized md5 fast path.
+    """(id, fps) — table-level winnowing as a vectorized md5 kernel.
 
     The column-expression form (:func:`winnow_fingerprints`) pays one
     interpreted md5 call per k-gram INSTANCE plus a per-window array
     allocation; on long documents that dominated q44 (measured 14.5s for
-    5k docs x ~4.8k chars). For ``hash_fn="md5"`` this runs a
-    ``mapInArrow`` kernel instead (same pattern as the MinHash kernel,
-    operators/dedup.py): pack each k-char ASCII gram into a uint64 key,
-    md5 only the DISTINCT grams per partition, take window minima over
-    integer digest-ranks with shifted ``np.minimum`` chains, and dedupe
-    per document in first-occurrence order — exactly ``array_distinct``'s
+    5k docs x ~4.8k chars). This runs a ``mapInArrow`` kernel instead on
+    the md5 gram core the MinHash kernel shares (functions/md5_grams.py):
+    md5 only the DISTINCT grams per batch, take window minima over integer
+    digest-ranks with shifted ``np.minimum`` chains, and dedupe per
+    document in first-occurrence order — exactly ``array_distinct``'s
     order, so outputs are identical element-for-element (parity-pinned in
     tests/test_minhash_kernel.py). Non-ASCII batches or k > 8 take a
-    memoized per-document slow path with the same semantics. The
-    xxhash64 family keeps the column expression (a call costs ns; the
-    JVM-hash seed semantics are not portably reproducible in Python).
+    memoized per-document slow path with the same semantics.
     """
     from pyspark.sql import functions as F
 
     from nfl_feature_store_spark.plans.layout import spread
 
     src = spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-    if hash_fn != "md5":
-        return src.select(
-            id_col, winnow_fingerprints(text_col, k, w, hash_fn).alias(out_col)
-        )
     lowered = src.select(
         F.col(id_col).alias("id"), F.expr(f"lower(coalesce({text_col}, ''))").alias("__t")
     )
@@ -234,100 +221,45 @@ def _winnow_md5_kernel(k: int, w: int):
         import numpy as np
         import pyarrow as pa
 
+        from nfl_feature_store_spark.functions import md5_grams
+
         md5 = hashlib.md5
         memo: dict[str, str] = {}
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            ids = b.column("id")
-            txt = b.column("__t").cast(pa.large_string())
-            buf = np.frombuffer(txt.buffers()[2] or b"", dtype=np.uint8)
-            offs = np.frombuffer(txt.buffers()[1], dtype=np.int64)[
-                txt.offset : txt.offset + n + 1
-            ]
-            lens = np.diff(offs)
-            ascii_ok = k <= 8 and (buf.size == 0 or bool((buf < 128).all()))
-            if not ascii_ok:
-                flat: list[str] = []
-                counts = np.empty(n, dtype=np.int64)
+            txt = b.column("__t")
+            buf, offs = md5_grams.text_bytes(txt)
+            if md5_grams.fast_path_ok(buf, k):
+                keys, starts = md5_grams.gram_keys(buf, offs, k)
+                inv, dig = md5_grams.distinct_digests(keys, k, [b""])
+                rank, ordered = md5_grams.digest_ranks(dig[:, 0])
+                fr = rank[inv]
+                # window minima over w consecutive gram ranks, each window
+                # clipped to its own document's grams
+                grams = np.diff(starts, append=len(fr))
+                doc = np.repeat(np.arange(n), grams)
+                wm = fr.copy()
+                for s in range(1, w):
+                    nxt = np.where(doc[s:] == doc[:-s], fr[s:], len(ordered))
+                    np.minimum(wm[:-s], nxt, out=wm[:-s])
+                # a document's windows start at its first max(grams-(w-1), 1) grams
+                nw = np.maximum(grams - (w - 1), 1)
+                mins = wm[md5_grams.spans(starts, nw)]
+                wdoc = np.repeat(np.arange(n), nw)
+                # dedupe per document in first-occurrence order
+                _, first = np.unique(wdoc * len(ordered) + mins, return_index=True)
+                first.sort()
+                flat, counts = ordered[mins[first]], np.bincount(wdoc[first], minlength=n)
+            else:
+                flat, counts = [], np.empty(n, dtype=np.int64)
                 for d in range(n):
                     fps = _slow_doc(txt[d].as_py(), memo, md5)
                     counts[d] = len(fps)
                     flat.extend(fps)
-                fp_arr = pa.ListArray.from_arrays(
-                    pa.array(np.concatenate(([0], np.cumsum(counts))), type=pa.int32()),
-                    pa.array(flat, type=pa.string()),
-                )
-                yield pa.RecordBatch.from_arrays([ids, fp_arr], ["id", "fps"])
-                continue
-
-            # ---- ASCII fast path: one uint64 key per k-byte gram
-            long_mask = lens >= k
-            g_counts = np.where(long_mask, lens - (k - 1), 0)
-            total = int(g_counts.sum())
-            gstarts = np.concatenate(([0], np.cumsum(g_counts)))
-            if total:
-                pos = np.repeat(offs[:-1], g_counts) + (
-                    np.arange(total) - np.repeat(gstarts[:-1], g_counts)
-                )
-                keys = np.zeros(total, dtype=np.uint64)
-                for byte_i in range(k):
-                    keys |= buf[pos + byte_i].astype(np.uint64) << np.uint64(8 * byte_i)
-                uniq, inv = np.unique(keys, return_inverse=True)
-                U = len(uniq)
-                ub = uniq[:, None].view(np.uint8).reshape(U, 8)[:, :k]
-                dig = np.empty(U, dtype="S32")
-                for u_i in range(U):
-                    dig[u_i] = md5(ub[u_i].tobytes()).hexdigest().encode()
-                order = np.argsort(dig, kind="stable")
-                rank = np.empty(U, dtype=np.int64)
-                rank[order] = np.arange(U)
-                sorted_dig = dig[order]
-                fr = rank[inv]
-                # global window minima over w consecutive gram ranks;
-                # per-doc validity masks out windows that cross documents
-                wm = fr.copy()
-                for s in range(1, w):
-                    if total > s:
-                        np.minimum(wm[:-s], fr[s:], out=wm[:-s])
-            per_doc_ranks: list[np.ndarray] = []
-            counts = np.empty(n, dtype=np.int64)
-            for d in range(n):
-                if not long_mask[d]:
-                    # whole (short) text is the single gram and window
-                    g = buf[offs[d] : offs[d + 1]].tobytes()
-                    h = md5(g).hexdigest()
-                    per_doc_ranks.append(None)
-                    counts[d] = 1
-                    per_doc_ranks[-1] = h  # sentinel: plain digest string
-                    continue
-                a = gstarts[d]
-                g_d = g_counts[d]
-                if g_d >= w:
-                    seg = wm[a : a + g_d - (w - 1)]
-                else:
-                    seg = fr[a : a + g_d].min(keepdims=True)
-                u, first = np.unique(seg, return_index=True)
-                ordered = u[np.argsort(first, kind="stable")]
-                per_doc_ranks.append(ordered)
-                counts[d] = len(ordered)
-            # assemble: map ranks back to digests in one flat conversion
-            flat_parts: list = []
-            for d in range(n):
-                r = per_doc_ranks[d]
-                if isinstance(r, str):
-                    flat_parts.append(np.array([r.encode()], dtype="S32"))
-                else:
-                    flat_parts.append(sorted_dig[r])
-            flat_np = (
-                np.concatenate(flat_parts) if flat_parts else np.empty(0, dtype="S32")
-            )
-            fp_arr = pa.ListArray.from_arrays(
-                pa.array(np.concatenate(([0], np.cumsum(counts))), type=pa.int32()),
-                pa.array(flat_np.astype("U32"), type=pa.string()),
-            )
-            yield pa.RecordBatch.from_arrays([ids, fp_arr], ["id", "fps"])
+            fp_arr = md5_grams.string_lists(flat, counts)
+            yield pa.RecordBatch.from_arrays([b.column("id"), fp_arr], ["id", "fps"])
 
     return kernel
 

@@ -105,7 +105,6 @@ def near_dup_components(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """End-to-end near-dup clustering: LSH candidate pairs -> threshold on
     estimated Jaccard -> connected components -> every input document labeled
@@ -119,7 +118,7 @@ def near_dup_components(
 
     pairs = minhash_lsh_candidates(
         docs, id_col=id_col, text_col=text_col,
-        num_hashes=num_hashes, bands=bands, shingle_k=shingle_k, hash_fn=hash_fn,
+        num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
     ).where(F.col("est_jaccard") >= min_jaccard)
     comp = connected_components(pairs, src="id_a", dst="id_b")
     out = (

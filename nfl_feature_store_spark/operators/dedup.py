@@ -11,12 +11,9 @@ Four tiers, all shuffle-conscious:
   distance; bucketable by fingerprint prefix.
 * embedding cosine near-dup: see operators/similarity.py.
 
-Hash families (``hash_fn``): the production default is xxhash64 (JVM
-built-in, whole-stage codegen, fastest) — deterministic across runs and
-partitionings but engine-specific. Every hashed operator also offers
-``hash_fn="md5"``, a PORTABLE family computable bit-identically in other
-engines (DuckDB, Trino, ...), which upgrades the driver's correctness check
-from rows-only to full value-hash oracles:
+One hash family, md5, PORTABLE: every hashed operator is computable
+bit-identically in other engines (DuckDB, Trino, ...), so each has a
+full value-hash oracle in the registry (q30/q31/q40/q44/q53/q56):
 
 * string tier: md5 hex digests compare lexicographically in unsigned
   numeric order (fixed-width lowercase hex), so MinHash minima and LSH
@@ -27,13 +24,14 @@ from rows-only to full value-hash oracles:
   signed bigint. Bits 0..63 of the signed value equal the unsigned bits,
   so vote extraction ``(h >> i) & 1`` agrees across engines.
 
-md5 costs ~3-4x xxhash64 per call; use it for cross-engine verification
-runs, not the 10^12-row production path.
+An md5 call costs about a microsecond, so the gram-heavy operators
+(MinHash, winnowing) hash each DISTINCT gram once in a vectorized Arrow
+kernel (functions/md5_grams.py) instead of once per gram instance.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nfl_feature_store_spark.plans.layout import spread
@@ -68,11 +66,6 @@ def md5_low64_unsigned_sql(expr: str) -> str:
     ``md5_number_lower(expr)``) used by sampling/split/packing operators.
     ``expr`` must be a SQL string expression."""
     return _MD5_LOWER64_U.replace("md5(t)", f"md5({expr})")
-
-
-def _check_hash_fn(hash_fn: str) -> None:
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -114,45 +107,30 @@ def minhash_signature(
     text_col: str,
     num_hashes: int = 16,
     shingle_k: int = 5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """(id, sig) — per-document MinHash signature: array<bigint> under the
-    default xxhash64 family, array<string> (md5 hex; lexicographic order ==
-    unsigned numeric order) under the portable family.
+    """(id, sig) — per-document MinHash signature, array<string> of md5 hex
+    digests (lexicographic order == unsigned numeric order).
 
-    minhash_j(doc) = min over shingles s of hash(s, seed=j).
+    minhash_j(doc) = min over shingles s of md5(s || '#' || j).
 
-    Execution differs by family (same values either way):
-
-    * ``xxhash64``: computed inline with higher-order array functions
-      (transform + array_min) — one narrow projection per document. A
-      xxhash64 call is a few ns, so hashing every shingle INSTANCE inline
-      is cheaper than any restructuring.
-    * ``md5``: md5 is ~µs-expensive and shingle instances repeat massively
-      across documents (measured 10.3M instances over 2,059 DISTINCT
-      shingles on the 10x corpus — and min over a multiset equals min over
-      its distinct values), so the signature runs as a vectorized
-      ``mapInArrow`` kernel (guide §4.2) that md5-hashes each partition's
-      DISTINCT shingles once and reduces per-document minima over integer
-      ranks: per-instance cost drops from 16 md5 calls (~16 µs) to a
-      handful of vectorized integer ops. No extra shuffle — the kernel
-      rides the same spread partitioning, one output row per input row.
-      (A join-back-the-hash-table formulation was measured 4x SLOWER than
-      inline: carrying 16 hex digests per exploded instance through a join
-      materializes ~0.5 KB/instance — the kernel keeps instances as 8-byte
-      keys and only ever materializes digests per distinct shingle.)
+    md5 is ~µs-expensive and shingle instances repeat massively across
+    documents (measured 10.3M instances over 2,059 DISTINCT shingles on the
+    10x corpus — and min over a multiset equals min over its distinct
+    values), so the signature runs as a vectorized ``mapInArrow`` kernel
+    (guide §4.2) that md5-hashes each partition's DISTINCT shingles once
+    and reduces per-document minima over integer ranks: per-instance cost
+    drops from 16 md5 calls (~16 µs) to a handful of vectorized integer
+    ops. No extra shuffle — the kernel rides the same spread partitioning,
+    one output row per input row. (A join-back-the-hash-table formulation
+    was measured 4x SLOWER than inline: carrying 16 hex digests per
+    exploded instance through a join materializes ~0.5 KB/instance — the
+    kernel keeps instances as 8-byte keys and only ever materializes
+    digests per distinct shingle.) :func:`_minhash_signature_md5_expr` is
+    the column-algebra reference the kernel is pinned against.
     """
-    _check_hash_fn(hash_fn)
     # spread a low-parallelism scan BEFORE the heavy per-row compute so the
     # work uses every core (plans/layout.py — no-op at scale)
     src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
-    if hash_fn == "xxhash64":
-        per_seed = [f"transform(__sh, s -> xxhash64(s, {j}))" for j in range(num_hashes)]
-        sig = F.array(*[F.array_min(F.expr(e)) for e in per_seed])
-        return (
-            src.select("id", _shingles(text_col, shingle_k).alias("__sh"))
-            .select("id", sig.alias("sig"))
-        )
     # JVM lowers/coalesces ONCE (locale-exact with every other lower() in
     # the engine); the kernel sees ready-to-shingle text
     lowered = src.select(
@@ -188,16 +166,13 @@ def _minhash_signature_md5_expr(
 def _md5_minhash_kernel(num_hashes: int, k: int):
     """Arrow kernel: (id, __t lowered text) -> (id, sig array<string>).
 
-    Per batch: collect every k-char shingle instance as a packed integer
-    key (ASCII fast path: k bytes fit one uint64), ``np.unique`` them,
-    md5 each DISTINCT shingle under the ``num_hashes`` seeds, rank the
-    digests per seed, take per-document min-rank via
-    ``np.minimum.reduceat``, and map ranks back to digests. Hex digests
-    compare bytewise identically to Spark's UTF8String ordering, so the
-    min is exact. Non-ASCII batches take a per-document dict-cached slow
+    ASCII fast path (functions/md5_grams.py): md5 each DISTINCT shingle of
+    the batch under the ``num_hashes`` seeds, rank the digests per seed,
+    take per-document min-rank via ``np.minimum.reduceat`` and map ranks
+    back to digests. Non-ASCII batches take a per-document dict-cached slow
     path (same shingling rule on CHARACTERS, as substring() slices chars).
     """
-    seeds = [str(j).encode() for j in range(num_hashes)]
+    suffixes = [f"#{j}".encode() for j in range(num_hashes)]
 
     def kernel(batches):
         import hashlib
@@ -205,25 +180,26 @@ def _md5_minhash_kernel(num_hashes: int, k: int):
         import numpy as np
         import pyarrow as pa
 
+        from nfl_feature_store_spark.functions import md5_grams
+
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            ids = b.column("id")
             txt = b.column("__t")
-            if isinstance(txt, pa.ChunkedArray):
-                txt = txt.combine_chunks()
-            txt = txt.cast(pa.large_string())
-            buf = np.frombuffer(txt.buffers()[2] or b"", dtype=np.uint8)
-            offs = np.frombuffer(txt.buffers()[1], dtype=np.int64)[
-                txt.offset : txt.offset + n + 1
-            ]
-            lens = np.diff(offs)
-            ascii_ok = k <= 8 and (buf.size == 0 or bool((buf < 128).all()))
-            if not ascii_ok:
+            buf, offs = md5_grams.text_bytes(txt)
+            if md5_grams.fast_path_ok(buf, k):
+                keys, starts = md5_grams.gram_keys(buf, offs, k)
+                inv, dig = md5_grams.distinct_digests(keys, k, suffixes)
+                sig = np.empty((n, num_hashes), dtype="S32")
+                for j in range(num_hashes):
+                    rank, ordered = md5_grams.digest_ranks(dig[:, j])
+                    sig[:, j] = ordered[np.minimum.reduceat(rank[inv], starts)]
+                flat = sig.reshape(-1)
+            else:
                 # slow path: per-doc char-shingling with a task-local memo
                 memo: dict[str, list[str]] = {}
-                sigs = []
+                flat = []
                 for d in range(n):
                     t = txt[d].as_py()
                     nw = max(len(t) - (k - 1), 1)
@@ -233,83 +209,40 @@ def _md5_minhash_kernel(num_hashes: int, k: int):
                         hs = memo.get(g)
                         if hs is None:
                             gb = g.encode("utf-8")
-                            hs = [
-                                hashlib.md5(gb + b"#" + sj).hexdigest() for sj in seeds
-                            ]
+                            hs = [hashlib.md5(gb + s).hexdigest() for s in suffixes]
                             memo[g] = hs
                         for j in range(num_hashes):
                             if per_seed[j] is None or hs[j] < per_seed[j]:
                                 per_seed[j] = hs[j]
-                    sigs.append(per_seed)
-                flat = pa.array(
-                    [h for s in sigs for h in s], type=pa.string()
-                )
-                sig_arr = pa.ListArray.from_arrays(
-                    pa.array(range(0, (n + 1) * num_hashes, num_hashes), type=pa.int32()),
-                    flat,
-                )
-                yield pa.RecordBatch.from_arrays([ids, sig_arr], ["id", "sig"])
-                continue
-
-            # ---- ASCII fast path: pack each shingle into a uint64 key.
-            # Full k-byte grams use bits 0..8k-1; short docs (< k chars,
-            # whole text is the single gram) get a length-tagged key above
-            # bit 8k so they can never collide with a full gram.
-            long_mask = lens >= k
-            # positions of every full gram, doc-ordered: for doc d the
-            # grams start at offs[d] .. offs[d]+lens[d]-k
-            counts = np.where(long_mask, lens - (k - 1), 0)
-            total = int(counts.sum())
-            starts_in_keys = np.concatenate(([0], np.cumsum(counts)))[:-1]
-            if total:
-                pos = np.repeat(offs[:-1], counts) + (
-                    np.arange(total) - np.repeat(starts_in_keys, counts)
-                )
-                keys = np.zeros(total, dtype=np.uint64)
-                for byte_i in range(k):
-                    keys |= buf[pos + byte_i].astype(np.uint64) << np.uint64(8 * byte_i)
-            else:
-                keys = np.zeros(0, dtype=np.uint64)
-
-            uniq, inv = np.unique(keys, return_inverse=True)
-            # md5 the DISTINCT shingles only
-            U = len(uniq)
-            ub = uniq[:, None].view(np.uint8).reshape(U, 8)[:, :k] if U else np.zeros((0, k), np.uint8)
-            dig = np.empty((U, num_hashes), dtype="S32")
-            md5 = hashlib.md5
-            for u_i in range(U):
-                g = ub[u_i].tobytes()
-                for j in range(num_hashes):
-                    dig[u_i, j] = md5(g + b"#" + seeds[j]).hexdigest().encode()
-            # per-seed global rank of each distinct shingle's digest
-            minrank = np.empty((n, num_hashes), dtype=np.int64)
-            sig_mat = np.empty((n, num_hashes), dtype="S32")
-            if total:
-                seg_nonempty = counts > 0
-                seg_starts = starts_in_keys[seg_nonempty]
-                for j in range(num_hashes):
-                    order = np.argsort(dig[:, j], kind="stable")
-                    rank = np.empty(U, dtype=np.int64)
-                    rank[order] = np.arange(U)
-                    flat_ranks = rank[inv]
-                    mr = np.minimum.reduceat(flat_ranks, seg_starts)
-                    sorted_dig = dig[order, j]
-                    minrank[seg_nonempty, j] = mr
-                    sig_mat[seg_nonempty, j] = sorted_dig[mr]
-            # short docs (< k chars): single gram = whole text
-            for d in np.nonzero(~long_mask)[0]:
-                g = buf[offs[d] : offs[d + 1]].tobytes()
-                for j in range(num_hashes):
-                    sig_mat[d, j] = md5(g + b"#" + seeds[j]).hexdigest().encode()
-
-            flat = pa.array(sig_mat.reshape(-1).astype("U32"), type=pa.string())
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(range(0, (n + 1) * num_hashes, num_hashes), type=pa.int32()),
-                flat,
-            )
-            yield pa.RecordBatch.from_arrays([ids, sig_arr], ["id", "sig"])
+                    flat.extend(per_seed)
+            sig_arr = md5_grams.string_lists(flat, np.full(n, num_hashes))
+            yield pa.RecordBatch.from_arrays([b.column("id"), sig_arr], ["id", "sig"])
 
     return kernel
+
+
+def lsh_bands(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, sig, band, bucket): each MinHash signature once per LSH band. A
+    band's bucket is the md5 of its hex minhashes joined by '|' — fixed-width
+    hex holds no '|', so the key is unambiguous and portable."""
+    rows = num_hashes // bands
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(F.array_join(F.slice("sig", b * rows + 1, rows), "|")).alias("bucket"),
+        )
+        for b in range(bands)
+    ]
+    return sigs.select("id", "sig", F.explode(F.array(*band_cols)).alias("bb")).select(
+        "id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def matching_minhashes(a: Column, b: Column) -> Column:
+    """Number of positions at which two signatures agree."""
+    return F.size(F.arrays_zip(a, b)) - F.size(
+        F.filter(F.arrays_zip(a.alias("x"), b.alias("y")), lambda s: s["x"] != s["y"])
+    )
 
 
 def minhash_lsh_candidates(
@@ -319,7 +252,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup candidate pairs via banded LSH over MinHash signatures.
 
@@ -329,22 +261,8 @@ def minhash_lsh_candidates(
     salted AQE handles stragglers. Returns distinct (id_a < id_b) pairs with
     the fraction of matching minhashes as an estimated Jaccard.
     """
-    _check_hash_fn(hash_fn)
-    rows = num_hashes // bands
-    sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_k, hash_fn=hash_fn)
-    if hash_fn == "xxhash64":
-        bucket_of = lambda b: F.xxhash64(  # noqa: E731
-            F.slice("sig", b * rows + 1, rows).cast("array<string>").cast("string")
-        )
-    else:
-        # md5 sig elements are fixed-width hex (no '|'), so the join is
-        # unambiguous and portable: md5(e1|e2|...|ek)
-        bucket_of = lambda b: F.md5(F.array_join(F.slice("sig", b * rows + 1, rows), "|"))  # noqa: E731
-    band_cols = [
-        F.struct(F.lit(b).alias("band"), bucket_of(b).alias("bucket")) for b in range(bands)
-    ]
-    exploded = sigs.select("id", "sig", F.explode(F.array(*band_cols)).alias("bb")).select(
-        "id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    exploded = lsh_bands(
+        minhash_signature(df, id_col, text_col, num_hashes, shingle_k), num_hashes, bands
     )
     a = exploded.alias("a")
     b = exploded.alias("b")
@@ -358,15 +276,7 @@ def minhash_lsh_candidates(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            (
-                F.size(F.arrays_zip(F.col("a.sig"), F.col("b.sig")))
-                - F.size(
-                    F.filter(
-                        F.arrays_zip(F.col("a.sig").alias("x"), F.col("b.sig").alias("y")),
-                        lambda s: s["x"] != s["y"],
-                    )
-                )
-            ).alias("n_match"),
+            matching_minhashes(F.col("a.sig"), F.col("b.sig")).alias("n_match"),
         )
         .distinct()
     )
@@ -375,18 +285,16 @@ def minhash_lsh_candidates(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, hash_fn: str = "xxhash64") -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash per document: whitespace tokens vote per bit position
     of their 64-bit hash; fingerprint bit = sign of the vote sum.
 
     Pure column algebra (aggregate over the token array with a 64-element
-    vote vector) — no explode, no shuffle, no UDF. ``hash_fn="md5"`` swaps
-    the token hash for the portable md5-low-64 family (module docstring):
-    bit extraction ``(h >> i) & 1`` is unaffected by the signed fold because
-    arithmetic vs logical shift only differ in the discarded high bits.
+    vote vector) — no explode, no shuffle, no UDF. The token hash is the
+    portable md5-low-64 family (module docstring): bit extraction
+    ``(h >> i) & 1`` is unaffected by the signed fold because arithmetic vs
+    logical shift only differ in the discarded high bits.
     """
-    _check_hash_fn(hash_fn)
-    tok_hash = "xxhash64(t)" if hash_fn == "xxhash64" else MD5_LOWER64_SQL
     # NULL text coalesces to '' (0 tokens, all-zero votes -> fingerprint 0,
     # n_tokens 0) so Spark and the DuckDB oracle agree on NULL semantics
     # (round-4 advice: previously NULL text yielded NULL simhash64 here but
@@ -402,7 +310,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, hash_fn: str = "xxhash64"
           (acc, h) -> zip_with(acc, sequence(0, 63),
                                (a, i) -> a + CASE WHEN (shiftright(h, i) & 1L) = 1L THEN 1L ELSE -1L END)
         )
-        """.replace("SRC", src).replace("TOKHASH", tok_hash)
+        """.replace("SRC", src).replace("TOKHASH", MD5_LOWER64_SQL)
     )
     bits = F.expr(
         "aggregate(zip_with(__votes, sequence(0, 63), (v, i) -> CASE WHEN v > 0 THEN shiftleft(1L, cast(i AS int)) ELSE 0L END),"

@@ -65,7 +65,6 @@ def elo_per_entity(
     init: float = DEFAULT_INIT,
     out_col: str = "elo_pre",
     presorted: bool = False,
-    num_partitions: int | None = None,
     max_partition_rows: int | None = None,
 ) -> DataFrame:
     """Per-entity cumulative rating before each event (parallel by entity).
@@ -96,7 +95,8 @@ def elo_per_entity(
             if max_partition_rows is not None and total > max_partition_rows:
                 raise ValueError(
                     f"elo_per_entity partition holds > max_partition_rows="
-                    f"{max_partition_rows} rows; raise num_partitions or thin the projection"
+                    f"{max_partition_rows} rows; raise spark.sql.shuffle.partitions "
+                    "or thin the projection"
                 )
             blist.append(b)
         if not blist:
@@ -132,7 +132,7 @@ def elo_per_entity(
     if presorted:
         clustered = df
     else:
-        n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        n = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         clustered = df.repartition(int(n), entity_col).sortWithinPartitions(entity_col, *order)
     return clustered.mapInArrow(kernel, schema=out_schema)
 

@@ -55,7 +55,6 @@ def with_ewma(
     reset_col: str | None = None,
     prefix: str = "ewma_",
     presorted: bool = False,
-    num_partitions: int | None = None,
     max_partition_rows: int | None = None,
 ) -> DataFrame:
     """Attach ``ewma_{m}`` per metric: span-EWM of the lag-1 series per entity.
@@ -64,7 +63,7 @@ def with_ewma(
     materializes one partition in pandas by design (see module docstring), so
     a partition blown up by a pathologically hot entity should FAIL FAST with
     guidance (route the hot entity through operators/salted.py salted_ewm, or
-    raise num_partitions) rather than OOM the worker."""
+    raise spark.sql.shuffle.partitions) rather than OOM the worker."""
     if len(set(metrics)) != len(metrics):
         raise ValueError(f"with_ewma metrics contains duplicates: {metrics}")
     overlap = set(metrics) & ({entity_col} | ({reset_col} if reset_col else set()))
@@ -91,7 +90,7 @@ def with_ewma(
                 raise ValueError(
                     f"with_ewma partition holds > max_partition_rows="
                     f"{max_partition_rows} rows; a hot entity this size belongs in "
-                    "operators.salted.salted_ewm, or raise num_partitions"
+                    "operators.salted.salted_ewm, or raise spark.sql.shuffle.partitions"
                 )
             blist.append(b)
         if not blist:
@@ -136,6 +135,6 @@ def with_ewma(
     if presorted:
         clustered = df
     else:
-        n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        n = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         clustered = df.repartition(int(n), entity_col).sortWithinPartitions(entity_col, *order)
     return clustered.mapInArrow(kernel, schema=out_schema)

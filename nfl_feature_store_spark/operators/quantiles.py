@@ -12,8 +12,7 @@ aggregation lanes. Two modes, same output shape:
   only option at 10^12 rows. Guarantee: the returned value's RANK is within
   n/accuracy of the target rank — an error bound on rank, not on value.
 
-Same split as the engine's md5-vs-xxhash64 hash family: the exact form
-exists so the approx form can be AUDITED against it (see
+The exact form exists so the approx form can be AUDITED against it (see
 tests/test_quantiles.py's rank-error assertion).
 """
 

@@ -112,35 +112,21 @@ def contamination_report(
     surface with est_jaccard 1.0, so this subsumes the exact-fingerprint
     check.
     """
-    from nfl_feature_store_spark.operators.dedup import minhash_signature
-
-    rows = num_hashes // bands
+    from nfl_feature_store_spark.operators.dedup import (
+        lsh_bands,
+        matching_minhashes,
+        minhash_signature,
+    )
 
     def banded(df: DataFrame, side: str) -> DataFrame:
-        sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_k, hash_fn="md5")
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.array_join(F.slice("sig", b * rows + 1, rows), "|")).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-        return sigs.select(
-            F.col("id").alias(f"{side}_id"),
-            F.col("sig").alias(f"{side}_sig"),
-            F.explode(F.array(*band_cols)).alias("bb"),
-        ).select(
-            f"{side}_id", f"{side}_sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+        sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_k)
+        return lsh_bands(sigs, num_hashes, bands).select(
+            F.col("id").alias(f"{side}_id"), F.col("sig").alias(f"{side}_sig"), "band", "bucket"
         )
 
     t = banded(train, "train")
     e = banded(evals, "eval")
-    n_match = F.size(F.arrays_zip("train_sig", "eval_sig")) - F.size(
-        F.filter(
-            F.arrays_zip(F.col("train_sig").alias("x"), F.col("eval_sig").alias("y")),
-            lambda s: s["x"] != s["y"],
-        )
-    )
+    n_match = matching_minhashes(F.col("train_sig"), F.col("eval_sig"))
     pairs = (
         e.join(t, ["band", "bucket"])
         .select("eval_id", "train_id", (n_match / F.lit(num_hashes)).alias("est_jaccard"))

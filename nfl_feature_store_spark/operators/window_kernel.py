@@ -182,7 +182,12 @@ def session_avg(
         return num / den, den <= 0
 
 
-def ewma_steps(L: np.ndarray, new_ent: np.ndarray, span: int) -> np.ndarray:
+def ewma_steps(
+    L: np.ndarray,
+    new_ent: np.ndarray,
+    span: int,
+    lanes: tuple[np.ndarray, np.ndarray] | None = None,
+) -> tuple[np.ndarray, tuple[np.ndarray, np.ndarray]]:
     """Span-EWM (``adjust=False``) of the lag series ``L`` per entity, bit
     for bit what pandas' grouped ``ewm(span, adjust=False).mean()`` returns:
     NaN and ±inf are missing (pandas masks infinities before the recursion),
@@ -194,6 +199,10 @@ def ewma_steps(L: np.ndarray, new_ent: np.ndarray, span: int) -> np.ndarray:
     (old_wt + a)`` unless ``weighted == x`` and resets ``old_wt = 1``; the
     first observation copies ``x``. ``old_wt`` is 1 whenever ``weighted`` is
     NaN, since only an update can make it NaN.
+
+    ``lanes`` seeds the lanes, one row per entity in row order; by default
+    every entity starts unobserved (NaN, 1). Returns the EWM and the final
+    lanes, so a recursion cut after any row continues bit for bit from them.
 
     Batched by turn POSITION, not by row: entities are ordered longest
     first, so the lanes still active at position ``p`` are a prefix and are
@@ -208,12 +217,14 @@ def ewma_steps(L: np.ndarray, new_ent: np.ndarray, span: int) -> np.ndarray:
     order = np.argsort(-lens, kind="stable")
     starts, lens = starts[order], lens[order]
     EW = np.empty_like(L)
-    EW[starts] = np.nan  # pos 0 has no prior row
-    W = np.full((len(starts), M), np.nan)
-    OW = np.ones((len(starts), M))
+    if lanes is None:
+        W = np.full((len(starts), M), np.nan)
+        OW = np.ones((len(starts), M))
+    else:
+        W, OW = lanes[0][order], lanes[1][order]
     active = len(starts)
     with np.errstate(invalid="ignore"):
-        for p in range(1, int(lens[0]) if n else 0):
+        for p in range(int(lens[0]) if n else 0):
             while lens[active - 1] <= p:
                 active -= 1
             rows = starts[:active] + p
@@ -226,7 +237,9 @@ def ewma_steps(L: np.ndarray, new_ent: np.ndarray, span: int) -> np.ndarray:
             OW[:active] = np.where(wv & ~obs, ow, 1.0)
             W[:active] = new
             EW[rows] = new
-    return EW
+    final_W, final_OW = np.empty_like(W), np.empty_like(OW)
+    final_W[order], final_OW[order] = W, OW
+    return EW, (final_W, final_OW)
 
 
 def kernel_table(tbl, spec: FeatureSpec, ewma_span: int | None):
@@ -293,7 +306,7 @@ def kernel_table(tbl, spec: FeatureSpec, ewma_span: int | None):
                 emit("session_avg_{m}", *session_avg(S, C, L, V1, new_ent, isf))
         if ewma_span:
             # NaN -> NULL: pandas cannot tell a missing EWMA from NaN either
-            EW = ewma_steps(L, new_ent, ewma_span)
+            EW, _ = ewma_steps(L, new_ent, ewma_span)
             emit("ewma_{m}", EW, np.isnan(EW))
 
     # Arrow keeps null_count per column, so validity is known from metadata:

@@ -14,9 +14,10 @@ hash-identical:
 * window orderings always carry a unique tie-break key (event_id, doc_id...)
   so results are deterministic under any partitioning.
 
-Rows-only entries (EWMA, Elo, MinHash-LSH, SimHash) have no SQL oracle —
-the recursion/hash choices aren't ANSI-SQL-expressible — and are covered by
-the pandas-referee pytest suite instead.
+Every entry has an oracle. The sequential recursions (EWMA, Elo,
+salted EWM) replay as DuckDB recursive CTEs, and the hashed operators
+(MinHash-LSH, SimHash, winnowing) use the portable md5 family, which
+DuckDB computes bit for bit.
 """
 
 from __future__ import annotations
@@ -860,15 +861,14 @@ FROM s GROUP BY 1, 2
 # (verified 10000/10000 exact at sf0.01). All numeric literals are cast to
 # DOUBLE: DuckDB parses bare `1500.0` as DECIMAL(5,1) and would otherwise
 # run the whole recursion in scale-1 decimal arithmetic.
-# q30/q31/q40/q44 (MinHash-LSH / SimHash / winnowing) run the engine's
-# PORTABLE md5 hash family here (operators/dedup.py module docstring:
-# md5 hex strings min lexicographically == unsigned numerically;
+# q30/q31/q40/q44/q53/q56 (MinHash-LSH / SimHash / winnowing) run the
+# engine's one hash family, the PORTABLE md5 (operators/dedup.py module
+# docstring: md5 hex strings min lexicographically == unsigned numerically;
 # md5_number_lower == conv(reversed-hex, 16, 10) — byte-order verified) so
-# the driver gets full rows+schema+hash oracles; the xxhash64 production
-# default keeps its pytest referees. q39/q47 (round-5): fully oracled via
-# frozen ANN constants (functions/ann_constants.py) — the data-independent
-# hyperplane family and the pretrained IVF quantizer embed as DOUBLE[]
-# literals on both engines.
+# each gets a full rows+schema+hash oracle. q39/q47 (round-5): fully
+# oracled via frozen ANN constants (functions/ann_constants.py) — the
+# data-independent hyperplane family and the pretrained IVF quantizer embed
+# as DOUBLE[] literals on both engines.
 
 
 def q28_ewma(spark: SparkSession, sf: str) -> DataFrame:
@@ -965,7 +965,7 @@ def q30_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     from nfl_feature_store_spark.operators.dedup import minhash_lsh_candidates
 
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 1000)
-    return minhash_lsh_candidates(docs, id_col="doc_id", text_col="text", hash_fn="md5")
+    return minhash_lsh_candidates(docs, id_col="doc_id", text_col="text")
 
 
 Q30_SQL = """
@@ -1005,7 +1005,7 @@ def q31_simhash(spark: SparkSession, sf: str) -> DataFrame:
     from nfl_feature_store_spark.operators.dedup import simhash
 
     docs = load_table(spark, sf, "documents")
-    return simhash(docs, id_col="doc_id", text_col="text", hash_fn="md5")
+    return simhash(docs, id_col="doc_id", text_col="text")
 
 
 # fingerprint construction: per-bit votes over token hashes, then the
@@ -1295,7 +1295,7 @@ def q40_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     from nfl_feature_store_spark.operators.dedup import simhash, simhash_near_pairs
 
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 1000)
-    fps = simhash(docs, id_col="doc_id", text_col="text", hash_fn="md5").select(
+    fps = simhash(docs, id_col="doc_id", text_col="text").select(
         "doc_id", "simhash64"
     )
     return simhash_near_pairs(fps, id_col="doc_id", max_hamming=16, prefix_bits=8)
@@ -1446,11 +1446,11 @@ def q44_winnow_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     """Rolling-hash document fingerprinting (winnowing): min-hash of each
     window of k-gram hashes, deduped — portable-md5 family => fully oracled
     (count AND an order-insensitive digest of the fingerprint set). The
-    shared-substring guarantee stays pytest-pinned on the xxhash64 default."""
+    shared-substring guarantee is pytest-pinned separately."""
     from nfl_feature_store_spark.functions.text import winnow_fingerprints_table
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    fps = winnow_fingerprints_table(docs, "doc_id", "text", k=8, w=4, hash_fn="md5")
+    fps = winnow_fingerprints_table(docs, "doc_id", "text", k=8, w=4)
     return fps.select(
         "doc_id",
         F.size("fps").cast("long").alias("n_fingerprints"),
@@ -1876,8 +1876,7 @@ def q55_grouped_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     interpolation aggregate (bit-matches DuckDB quantile_cont); it buffers
     each group's values, so at 10^12 rows the scale path is
     `approx_percentile` (t-digest, one pass, partial-aggregatable) with
-    this exact form kept for verification runs — same pattern as the
-    md5-vs-xxhash64 hash family split."""
+    this exact form kept for verification runs."""
     from nfl_feature_store_spark.operators.quantiles import grouped_quantiles
 
     ev = load_table(spark, sf, "events")
@@ -1907,9 +1906,7 @@ def q56_dedup_components(spark: SparkSession, sf: str) -> DataFrame:
     from nfl_feature_store_spark.operators.components import near_dup_components
 
     docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 1000)
-    return near_dup_components(
-        docs, id_col="doc_id", text_col="text", min_jaccard=0.5, hash_fn="md5"
-    )
+    return near_dup_components(docs, id_col="doc_id", text_col="text", min_jaccard=0.5)
 
 
 # pair pipeline identical to Q30_SQL; then: symmetrize -> recursive label

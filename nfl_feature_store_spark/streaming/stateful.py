@@ -1,9 +1,11 @@
 """Stateful streaming per-entity features via ``applyInPandasWithState``
 (SURVEY.md §2.9 extension; the batch analog is operators/ewma.py).
 
-The batch engine computes EWMA with one pandas pass per partition; under
-Structured Streaming the recursion state (current EWM value + the previous
-turn's raw value for the lag-1 input) must survive across micro-batches.
+The batch engine computes EWMA with one pass per partition; under
+Structured Streaming the recursion state (the EWM lane ``(weighted,
+old_wt)`` of ``window_kernel.ewma_steps``, which both engines run, + the
+previous turn's raw value for the lag-1 input) must survive across
+micro-batches.
 ``applyInPandasWithState`` keys the stream by ``conv_id`` and hands each
 key's new rows to a vectorized pandas kernel together with its ``GroupState``
 — state size is O(metrics) per conversation, the smallest possible.
@@ -34,11 +36,14 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from nfl_feature_store_spark.operators.window_kernel import ewma_steps
 
 
 def _ttl_ms(state_ttl: str | None) -> int | None:
@@ -68,7 +73,6 @@ def streaming_ewma(
     ``with_turn_metrics``); duplicates should be collapsed upstream
     (``dropDuplicatesWithinWatermark``).
     """
-    alpha = 2.0 / (span + 1.0)
     out_schema = T.StructType(
         [
             T.StructField("conv_id", T.StringType(), False),
@@ -77,10 +81,10 @@ def streaming_ewma(
         ]
         + [T.StructField(f"ewma_{m}", T.DoubleType(), True) for m in metrics]
     )
-    # per metric: (ewm value, seeded flag, previous raw value, has_prev flag)
+    # per metric: the EWMA lane (weighted, old_wt) of window_kernel.ewma_steps
+    # and the last raw value, which is the next turn's lag
     state_schema = T.StructType(
-        [T.StructField(f, T.DoubleType(), True) for m in metrics for f in (f"e_{m}", f"x_{m}")]
-        + [T.StructField("n_seen", T.LongType(), True)]
+        [T.StructField(f"{f}_{m}", T.DoubleType(), True) for f in ("w", "ow", "x") for m in metrics]
     )
 
     ttl_ms = _ttl_ms(state_ttl)
@@ -93,34 +97,28 @@ def streaming_ewma(
             # recursion (module docstring resume contract).
             state.remove()
             return
+        M = len(metrics)
         if state.exists:
-            st = list(state.get)
+            # NULL reads back as NaN: an unobserved lane or a NULL last value
+            st = np.array(state.get, dtype=np.float64)
         else:
-            st = [None] * (2 * len(metrics)) + [0]
-        n_seen = int(st[-1] or 0)
+            st = np.concatenate((np.full(M, np.nan), np.ones(M), np.full(M, np.nan)))
         pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
             ["ts", "turn_idx"], kind="mergesort", ignore_index=True
         )
-        out = {"conv_id": pdf["conv_id"], "turn_idx": pdf["turn_idx"], "ts": pdf["ts"]}
-        for j, m in enumerate(metrics):
-            e, x_prev = st[2 * j], st[2 * j + 1]
-            vals = pdf[m].astype("float64").to_numpy()
-            col = []
-            for x in vals:
-                if x_prev is not None:  # update with the lag-1 value first
-                    e = x_prev if e is None else e + alpha * (x_prev - e)
-                col.append(e)
-                x_prev = float(x)
-            st[2 * j], st[2 * j + 1] = e, x_prev
-            out[f"ewma_{m}"] = col
-        st[-1] = n_seen + len(pdf)
-        state.update(tuple(st))
+        X = pdf[list(metrics)].to_numpy(dtype=np.float64, na_value=np.nan)
+        L = np.vstack((st[None, 2 * M :], X[:-1]))
+        new_ent = np.zeros(len(pdf), dtype=bool)
+        new_ent[0] = True
+        EW, (W, OW) = ewma_steps(L, new_ent, span, lanes=(st[None, :M], st[None, M : 2 * M]))
+        state.update(tuple(np.concatenate((W[0], OW[0], X[-1])).tolist()))
         if ttl_ms is not None:
             # anchor at the newest turn: rows behind the watermark are
             # dropped upstream, so max(ts) > watermark and the target is
             # always a legal (future-of-watermark) timeout
             state.setTimeoutTimestamp(int(pdf["ts"].max().value // 1_000_000) + ttl_ms)
-        yield pd.DataFrame(out)
+        out = {"conv_id": pdf["conv_id"], "turn_idx": pdf["turn_idx"], "ts": pdf["ts"]}
+        yield pd.DataFrame({**out, **{f"ewma_{m}": EW[:, j] for j, m in enumerate(metrics)}})
 
     keyed = turns.withWatermark("ts", watermark).groupBy("conv_id")
     timeout = (

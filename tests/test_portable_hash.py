@@ -53,7 +53,7 @@ def _cmp(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, key):
 
 
 def test_minhash_signature_parity(docs_sdf, duck):
-    got = minhash_signature(docs_sdf, "doc_id", "text", hash_fn="md5").toPandas()
+    got = minhash_signature(docs_sdf, "doc_id", "text").toPandas()
     exp = duck.sql(
         """
         WITH d AS (SELECT doc_id AS id, lower(coalesce(text,'')) AS t FROM documents),
@@ -70,7 +70,7 @@ def test_minhash_signature_parity(docs_sdf, duck):
 
 
 def test_simhash_parity(docs_sdf, duck):
-    got = simhash(docs_sdf, "doc_id", "text", hash_fn="md5").toPandas()
+    got = simhash(docs_sdf, "doc_id", "text").toPandas()
     exp = duck.sql(
         """
         WITH d AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(coalesce(text,'')), '\\s+'),
@@ -93,7 +93,7 @@ def test_simhash_parity(docs_sdf, duck):
 
 
 def test_simhash_md5_finds_planted_dups(docs_sdf):
-    fps = simhash(docs_sdf, "doc_id", "text", hash_fn="md5").select("doc_id", "simhash64")
+    fps = simhash(docs_sdf, "doc_id", "text").select("doc_id", "simhash64")
     pairs = simhash_near_pairs(fps, id_col="doc_id", max_hamming=16, prefix_bits=8).toPandas()
     found = set(map(tuple, pairs[["id_a", "id_b"]].to_numpy()))
     assert (0, 8) in found  # exact dup: hamming 0, guaranteed bucketed
@@ -101,7 +101,7 @@ def test_simhash_md5_finds_planted_dups(docs_sdf):
 
 
 def test_lsh_candidates_parity(docs_sdf, duck):
-    got = minhash_lsh_candidates(docs_sdf, "doc_id", "text", hash_fn="md5").toPandas()
+    got = minhash_lsh_candidates(docs_sdf, "doc_id", "text").toPandas()
     exp = duck.sql(
         """
         WITH d AS (SELECT doc_id, lower(coalesce(text,'')) AS t FROM documents),
@@ -127,7 +127,7 @@ def test_lsh_candidates_parity(docs_sdf, duck):
 def test_winnow_parity(docs_sdf, duck):
     got = (
         docs_sdf.select(
-            "doc_id", winnow_fingerprints("text", k=8, w=4, hash_fn="md5").alias("fps")
+            "doc_id", winnow_fingerprints("text", k=8, w=4).alias("fps")
         )
         .select(
             "doc_id",
@@ -156,15 +156,8 @@ def test_winnow_md5_shared_substring_guarantee(docs_sdf):
     substring of length >= k + w - 1 = 11 share a fingerprint."""
     rows = (
         docs_sdf.filter(F.col("doc_id").isin(0, 1))
-        .select("doc_id", winnow_fingerprints("text", k=8, w=4, hash_fn="md5").alias("fps"))
+        .select("doc_id", winnow_fingerprints("text", k=8, w=4).alias("fps"))
         .toPandas()
     )
     a, b = (set(rows[rows.doc_id == i]["fps"].iloc[0]) for i in (0, 1))
     assert a & b
-
-
-def test_hash_fn_validation(docs_sdf):
-    with pytest.raises(ValueError, match="hash_fn"):
-        simhash(docs_sdf, "doc_id", "text", hash_fn="sha1")
-    with pytest.raises(ValueError, match="hash_fn"):
-        winnow_fingerprints("text", hash_fn="crc32")

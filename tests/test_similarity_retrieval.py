@@ -7,9 +7,9 @@ simhash_near_pairs shipped untested):
 * simhash_near_pairs must recover planted near-duplicates (2 tokens changed
   out of 80) and nothing else on a well-separated corpus.
 
-Everything here is deterministic: the hyperplanes/token hashes are xxhash64
-column expressions and the data is seeded, so thresholds are stable pins,
-not statistical hopes.
+Everything here is deterministic: the hyperplanes (xxhash64) and token
+hashes (md5) are column expressions and the data is seeded, so thresholds
+are stable pins, not statistical hopes.
 """
 
 from __future__ import annotations

@@ -142,15 +142,10 @@ def test_simhash_null_text_matches_empty(spark):
 
     pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": [None, "", "hello world"]})
     sdf = spark.createDataFrame(pdf)
-    for hash_fn in ("xxhash64", "md5"):
-        sh = simhash(sdf, "doc_id", "text", hash_fn=hash_fn).toPandas().set_index("doc_id")
-        assert sh.loc[1, "simhash64"] == sh.loc[2, "simhash64"] == 0
-        assert sh.loc[1, "n_tokens"] == sh.loc[2, "n_tokens"] == 0
-        assert sh.loc[3, "n_tokens"] == 2
-        sig = (
-            minhash_signature(sdf, "doc_id", "text", hash_fn=hash_fn)
-            .toPandas()
-            .set_index("id")
-        )
-        assert list(sig.loc[1, "sig"]) == list(sig.loc[2, "sig"])
-        assert all(v is not None for v in sig.loc[1, "sig"])
+    sh = simhash(sdf, "doc_id", "text").toPandas().set_index("doc_id")
+    assert sh.loc[1, "simhash64"] == sh.loc[2, "simhash64"] == 0
+    assert sh.loc[1, "n_tokens"] == sh.loc[2, "n_tokens"] == 0
+    assert sh.loc[3, "n_tokens"] == 2
+    sig = minhash_signature(sdf, "doc_id", "text").toPandas().set_index("id")
+    assert list(sig.loc[1, "sig"]) == list(sig.loc[2, "sig"])
+    assert all(v is not None for v in sig.loc[1, "sig"])

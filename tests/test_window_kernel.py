@@ -181,22 +181,34 @@ def _same(a: np.ndarray, b: np.ndarray) -> bool:
     seed=st.integers(0, 2**32 - 1),
     span=st.integers(1, 30),
     missing=st.floats(0.0, 0.9),
+    cut=st.integers(0, 10**6),
 )
-def test_ewma_stepbatch_matches_rowloop(lens, seed, span, missing):
+def test_ewma_stepbatch_matches_rowloop(lens, seed, span, missing, cut):
     """``ewma_steps`` batches the recursion by turn position; every lane must
     match pandas' grouped ``ewm(adjust=False)`` — the per-row cython loop —
     bit for bit: NaN runs, ±inf (pandas masks them), ``-0.0``, repeated
-    values (the ``weighted == x`` skip) and huge magnitudes."""
+    values (the ``weighted == x`` skip) and huge magnitudes. Cut after any
+    row, the recursion resumed from the returned lanes (as streaming_ewma
+    carries them) gives the same bits."""
     rng = np.random.default_rng(seed)
     ent = np.repeat(np.arange(len(lens)), lens)
     X = rng.choice([-0.0, 0.0, 1.0, 2.0, -3.5, 1e300, np.inf, -np.inf], size=(len(ent), 3))
     X[rng.random(X.shape) < missing] = np.nan
     new_ent, _ = entity_positions(ent)
     L = lag1(X, new_ent)
+    c = cut % len(ent)
+    head, tail = new_ent[:c], new_ent[c:].copy()
+    tail[0] = True
     with np.errstate(all="ignore"):
-        got = ewma_steps(L, new_ent, span)
+        got, _ = ewma_steps(L, new_ent, span)
         ref = pd.DataFrame(L).groupby(ent, sort=False).ewm(span=span, adjust=False).mean()
+        EW1, (W1, OW1) = ewma_steps(L[:c], head, span)
+        W2, OW2 = np.full((tail.sum(), 3), np.nan), np.ones((tail.sum(), 3))
+        if c and not new_ent[c]:  # the cut splits an entity: carry its lanes
+            W2[0], OW2[0] = W1[-1], OW1[-1]
+        EW2, _ = ewma_steps(L[c:], tail, span, lanes=(W2, OW2))
     assert _same(got, ref.droplevel(0).sort_index().to_numpy())
+    assert _same(np.vstack((EW1, EW2)), got)
 
 
 def test_sliding_unmasked_repair_matches_masked():
